@@ -280,6 +280,55 @@ SWEEP_BEST2 = {"mtm_sweep_scale", "mtm_sweep_stream"}
 SWEEP_CONFIGS = 32  # grid size of mtm_sweep_scale, for configs/sec
 
 
+def _vs_prev_detail(
+    rnd: int, cpus: int, timings: dict, repo: str = _REPO
+) -> dict | None:
+    """Round-over-round summary against the newest of the previous 3
+    rounds' detail files (``docs/BENCH_local_r{N}.json``) measured at
+    the SAME core count: geomean of per-key speedups over the common
+    keys (the Spark-free bookkeeper anchor excluded — it measures the
+    host) plus >10% regression/improvement counts. A detail slot can
+    hold a run at a different core count (a low-core scaling run
+    infers round N+1 and writes there), and comparing across core
+    counts would mislead, so such files are skipped — and so is a file
+    that does not record ``cpus`` at all, whose core count is unknown.
+    Missing or unreadable files are skipped too. Returns None when no
+    file qualifies or the first qualifying one shares no key."""
+    import math
+
+    for back in (1, 2, 3):
+        prev_rel = f"docs/BENCH_local_r{rnd - back:02d}.json"
+        try:
+            with open(os.path.join(repo, prev_rel)) as fh:
+                prev = json.load(fh)
+            prev_q = prev.get("queries") or {}
+            if prev.get("cpus") is None or int(prev["cpus"]) != cpus or not prev_q:
+                continue
+            logs = []
+            n_reg = n_imp = 0
+            for k, v in timings.items():
+                pv = prev_q.get(k)
+                if k == "bookkeeper_500k_bars" or not pv or not v:
+                    continue
+                logs.append(math.log(pv / v))
+                if v > pv * 1.10:
+                    n_reg += 1
+                elif v < pv * 0.90:
+                    n_imp += 1
+        except Exception:  # noqa: BLE001 - a missing/odd artifact
+            continue  # is skippable; try one round further back
+        if not logs:
+            return None
+        return {
+            "prev_round": rnd - back,
+            "n_common": len(logs),
+            "geomean_speedup": round(math.exp(sum(logs) / len(logs)), 3),
+            "n_regressed_gt10pct": n_reg,
+            "n_improved_gt10pct": n_imp,
+        }
+    return None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -871,45 +920,9 @@ def main() -> None:
     # did it by hand (geomean of per-key speedups; the Spark-free
     # bookkeeper anchor is excluded — it measures the HOST and is
     # reported separately as host_factor_vs_prev).
-    vs_prev = None
-    if out["sf"] == 0.1:
-        # walk back up to 3 rounds: a detail slot can hold a run at a
-        # DIFFERENT core count (the driver's low-cpu scaling pass
-        # infers round N+1 and writes there — see "cpus" above);
-        # comparing across core counts would mislead, so skip those.
-        for back in (1, 2, 3):
-            prev_rel = f"docs/BENCH_local_r{rnd - back:02d}.json"
-            try:
-                prev = json.load(open(os.path.join(_REPO, prev_rel)))
-                prev_q = prev.get("queries") or {}
-                if int(prev.get("cpus", cpus)) != int(cpus) or not prev_q:
-                    continue
-                import math
-
-                logs = []
-                n_reg = n_imp = 0
-                for k, v in timings.items():
-                    pv = prev_q.get(k)
-                    if k == "bookkeeper_500k_bars" or not pv or not v:
-                        continue
-                    logs.append(math.log(pv / v))
-                    if v > pv * 1.10:
-                        n_reg += 1
-                    elif v < pv * 0.90:
-                        n_imp += 1
-                if logs:
-                    vs_prev = {
-                        "prev_round": rnd - back,
-                        "n_common": len(logs),
-                        "geomean_speedup": round(
-                            math.exp(sum(logs) / len(logs)), 3
-                        ),
-                        "n_regressed_gt10pct": n_reg,
-                        "n_improved_gt10pct": n_imp,
-                    }
-                break
-            except Exception:  # noqa: BLE001 - a missing/odd artifact
-                continue  # is skippable; try one round further back
+    vs_prev = (
+        _vs_prev_detail(rnd, int(cpus), timings) if out["sf"] == 0.1 else None
+    )
     if vs_prev is not None:
         out["vs_prev_detail"] = vs_prev
     sf_tag = "" if out["sf"] == 0.1 else f"_sf{sf}"

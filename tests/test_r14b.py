@@ -502,12 +502,13 @@ def test_r14b_plan_shapes(spark):
     — AQE decides from measured sizes). For the LPA query the
     query-level plan is a post-checkpoint scan that pins nothing
     (review r14b), so the per-round shape is asserted on lpa_round's
-    plan directly (and kcore_round's, which had the same blind
-    spot)."""
+    plan directly (and kcore_round's and component_round's, which
+    have the same blind spot)."""
     from pyspark.sql import functions as F2
 
     from tradesignal_mtm_runner_spark import plans as P
     from tradesignal_mtm_runner_spark.operators.graph import (
+        component_round,
         kcore_round,
         lpa_round,
     )
@@ -542,3 +543,20 @@ def test_r14b_plan_shapes(spark):
         plan = P.explain_str(df)
         assert "CartesianProduct" not in plan, plan
         assert P.broadcast_hint_count(df) == 0
+
+    # the shared min-label CC step: one join plus one aggregate per
+    # round (leaf inputs, so every operator counted is the round's own)
+    cc = component_round(
+        spark.createDataFrame(
+            [(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long"
+        ),
+        spark.createDataFrame(
+            [(1, 1), (2, 2), (3, 3)], "node long, label long"
+        ),
+    )
+    plan = P.explain_str(cc)
+    assert "CartesianProduct" not in plan, plan
+    assert P.broadcast_hint_count(cc) == 0
+    opt = cc._jdf.queryExecution().optimizedPlan().toString()
+    ops = [ln.lstrip(" :+-").split(" ")[0] for ln in opt.splitlines()]
+    assert (ops.count("Join"), ops.count("Aggregate")) == (1, 1), opt

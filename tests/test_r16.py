@@ -1,11 +1,9 @@
 """Round-16 pins: (a) incremental components maintenance by component
 contraction equals the full recompute — planted bridge, random graphs,
-empty delta, and the persisted-labels index form; (b) the alternating
-large-star/small-star CC matches min-label propagation on planted path
-+ random graphs (the O(log n)-round 100×-diameter path); (c) the
-dedup-side connected_canonical gained its iterate-to-fixpoint twin —
-parity at test SF, a planted longer-than-unroll chain the fixed form
-provably splits, and the fail-loud bound."""
+empty delta, and the persisted-labels index form; (b) the dedup-side
+connected_canonical converged entry — parity at test SF, a planted
+longer-than-unroll chain the fixed form provably splits, and the
+fail-loud bound."""
 
 from __future__ import annotations
 
@@ -228,82 +226,7 @@ def test_components_refresh_probe_from_standing_tables(spark, tmp_path):
         spark.sql("DROP DATABASE r16cp CASCADE")
 
 
-# --- alternating large-star / small-star CC ----------------------------------
-
-
-def test_bigstar_planted_path_and_pieces(spark):
-    """The 40-node path: min-label propagation needs 39 rounds; the
-    alternating algorithm must converge to one star rooted at the
-    minimum in O(log n) rounds (max_iters=12 would already fail loud
-    if it needed linear rounds). Disjoint pieces keep distinct
-    roots."""
-    from tradesignal_mtm_runner_spark.operators.graph import (
-        component_labels_bigstar,
-    )
-
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 40)], "part_a long, part_b long"
-    )
-    got = {
-        r["part"]: r["component"]
-        for r in component_labels_bigstar(path, max_iters=12).collect()
-    }
-    assert got == {i: 1 for i in range(1, 41)}
-
-    two = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "part_a long, part_b long"
-    )
-    got = {
-        r["part"]: r["component"]
-        for r in component_labels_bigstar(two).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-
-@pytest.mark.parametrize("seed", [5, 23])
-def test_bigstar_matches_propagation_random(spark, seed):
-    from tradesignal_mtm_runner_spark.operators.graph import (
-        component_labels_bigstar,
-        component_labels_converged,
-    )
-
-    edges = _random_edges(spark, seed)
-    assert_frames_match(
-        component_labels_bigstar(edges).toPandas(),
-        component_labels_converged(edges).toPandas(),
-        f"bigstar_vs_propagation_seed{seed}",
-    )
-
-
-def test_bigstar_matches_propagation_real_graph(spark):
-    from tradesignal_mtm_runner_spark.operators.graph import (
-        component_labels_bigstar,
-        component_labels_converged,
-    )
-    from tradesignal_mtm_runner_spark.queries_r10b import _basket_pair_counts
-
-    _, pairs = _basket_pair_counts(spark, SF_SMOKE)
-    edges = pairs.select("part_a", "part_b")
-    assert_frames_match(
-        component_labels_bigstar(edges).toPandas(),
-        component_labels_converged(edges).toPandas(),
-        "bigstar_vs_propagation_sf",
-    )
-
-
-def test_bigstar_fails_loud_on_exhaustion(spark):
-    from tradesignal_mtm_runner_spark.operators.graph import (
-        component_labels_bigstar,
-    )
-
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 40)], "part_a long, part_b long"
-    )
-    with pytest.raises(RuntimeError, match="still rewiring"):
-        component_labels_bigstar(path, max_iters=1)
-
-
-# --- dedup-side converged CC twin ---------------------------------------------
+# --- dedup-side converged CC entry --------------------------------------------
 
 
 def _chain_pairs(spark, n: int):

@@ -8,7 +8,7 @@ trade_reward.py:81-168); see operators/mtm.py for the Spark plan.
 
 MTM query constants: fee_rate=0.001, laid_back_tax=0.0001 — chosen to
 exercise the fee/tax terms (reference trade_reward.py:144-166).
-Floats are rounded to ROUND=9 decimals on BOTH engines so the
+Floats are rounded with functions/rounding.r9 on BOTH engines so the
 order-insensitive value-hash comparison is robust to engine-level
 summation-order differences (measured <= 6e-14 on cumsums).
 """
@@ -24,7 +24,6 @@ from .sources import load_table, signals_from_events
 
 FEE = 0.001
 TAX = 0.0001
-ROUND = 9
 
 _ORDER = ["timestamp", "event_id"]
 
@@ -41,17 +40,6 @@ def _cfg() -> PnlCalcConfig:
 
 def _timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return signal_mtm_timeline(_signals(spark, sf_dir), _cfg(), order_cols=_ORDER)
-
-
-def r9(c) -> F.Column:
-    # + 0.0 canonicalizes IEEE -0.0 to +0.0 after rounding (NULL/NaN
-    # unaffected). The sign of zero is invisible to numeric comparison
-    # but not to the driver's representation hash: the declarative
-    # oracle's `prev_pos * price_diff` emits -0.0 where a Python state
-    # machine's `gross = 0.0` branch emits +0.0 (surfaced by
-    # mtm_sweep_stream's zero-fee grid cells in round 7). Every paired
-    # DuckDB oracle applies the same `round(x, 9) + 0.0`.
-    return F.round(c, ROUND) + F.lit(0.0)
 
 
 # --------------------------------------------------------------------------

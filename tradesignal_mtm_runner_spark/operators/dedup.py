@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..cache_registry import persist_tracked
 
 from ..functions.text import shingle_set, shingles, tokens
+from .graph import min_label_components, symmetrize
 
 
 def _fan_out(df: DataFrame, rows_per_task: int | None = None) -> DataFrame:
@@ -659,86 +660,24 @@ def connected_canonical(
     iters: int = 3,
     parts: int | None = None,
 ) -> DataFrame:
-    """Canonical-id assignment over a near-dup pair graph: every doc
-    gets the MINIMUM doc_id reachable within ``iters`` hops (min-label
-    propagation — the dataframe form of connected components). With
-    LSH near-dup graphs components are shallow (dup clusters, not
-    chains), so a small fixed ``iters`` converges; nothing
-    driver-side. keep = (doc_id == canonical_id) materializes the
-    deduplicated corpus selection.
+    """Canonical-id assignment over a near-dup pair graph, fixed-round
+    entry: every doc gets the MINIMUM doc_id reachable within
+    ``iters`` hops (min-label propagation — the dataframe form of
+    connected components). With LSH near-dup graphs components are
+    shallow (dup clusters, not chains), so a small fixed ``iters``
+    converges. keep = (doc_id == canonical_id)
+    materializes the deduplicated corpus selection.
 
-    OPTIMIZATION r16 (guide §2.4 — remove shuffles outright): each
-    iteration is now labels_next = MIN over {own label} ∪ {neighbor
-    labels} — ONE edge join + ONE union + ONE doc-keyed aggregate —
-    instead of the former join + per-src aggregate + left-join-back
-    (three keyed shuffles per hop). Identical output by definition of
-    the min (measured 3.4 s → 1.8 s for the 3-hop loop at sf0.1,
-    exact parity). The symmetrized edge relation is SEMI-restricted
-    to ``ids`` once up front — the left-join form dropped foreign
-    sources implicitly; the union form must not inject them.
-
-    OPTIMIZATION r16 second pass (guide §7.3 — plan size): edges and
-    each round's labels are LINEAGE-CUT (operators/graph.cut_lineage,
-    the kernel convention the graph family already follows) instead
-    of persist()ed. persist caches data but keeps the full logical
-    plan, so the initial plan of the 3-hop chain carried 180+
-    Exchange nodes and every AQE stage materialization re-optimized
-    that tree; cutting keeps each round's plan edge-sized (interleaved
-    A/B at sf0.1: sig+pairs+cc3 12.1→8.6 / 8.6→5.5 / 10.6→10.4 s,
-    identical output). Reliable-checkpoint mode applies per
-    cut_lineage's conf at cluster scale.
-
-    ``parts`` (optimization r17, the components_refresh convention —
-    VERDICT r16 item 3): a caller that KNOWS the graph is small (the
-    cc_refresh mini-CC over an already-materialized batch-sized
-    contracted graph) passes a measured partition budget; the hop
-    loop then runs with that many shuffle partitions instead of one
-    per core (conf scoped to this function — every hop executes
-    eagerly inside it via the cuts — and restored on exit). Corpus-
-    scale callers leave it None and keep full width."""
-    from .graph import cut_lineage
-
-    spark = ids.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    if parts is not None:
-        spark.conf.set(conf_key, str(parts))
-    try:
-        e = pairs.select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-        )
-        edges = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).join(
-            ids.select(F.col(id_col).alias("src")), "src", "left_semi"
-        )
-        # iterative algorithm: without materializing here, every
-        # iteration (and the final action) re-runs the whole upstream
-        # pair pipeline
-        edges = cut_lineage(edges)
-        labels = ids.select(F.col(id_col), F.col(id_col).alias("lab"))
-        for _ in range(iters):
-            nbr = edges.join(
-                labels.select(F.col(id_col).alias("dst"), "lab"), "dst"
-            ).select(F.col("src").alias(id_col), "lab")
-            # each iteration's labels feed the next join AND the union
-            # branch and the final action: without materializing,
-            # iteration k re-executes iterations 1..k-1 per consumer —
-            # O(iters^2) recompute of the join chain. One row per doc,
-            # same bounded footprint as the edges cut.
-            labels = cut_lineage(
-                labels.unionByName(nbr)
-                .groupBy(id_col)
-                .agg(F.min("lab").alias("lab"))
-            )
-    finally:
-        if parts is not None:
-            spark.conf.set(conf_key, old_parts)
-    return labels.select(
-        F.col(id_col),
-        F.col("lab").alias("canonical_id"),
-        (F.col(id_col) == F.col("lab")).alias("keep"),
-    )
+    Both entries run operators/graph.min_label_components: the shared
+    round loop (graph.fixpoint, per-round lineage cut) over the shared
+    min-label step (graph.component_round — one edge join, one union,
+    one doc-keyed aggregate). The symmetrized pair relation is
+    SEMI-restricted to ``ids`` on dst once up front, so a foreign
+    endpoint never enters the labelling. ``parts``: stage width for a
+    caller that KNOWS the graph is small (the cc_refresh mini-CC over
+    a batch-sized contracted graph), applied by explicit repartitions;
+    corpus-scale callers leave it None and keep full width."""
+    return _canonical(ids, pairs, id_col, rounds=iters, parts=parts)
 
 
 def connected_canonical_converged(
@@ -747,67 +686,41 @@ def connected_canonical_converged(
     id_col: str = "doc_id",
     max_iters: int = 64,
 ) -> DataFrame:
-    """Iterate-to-fixpoint twin of :func:`connected_canonical` — the
-    production entry for the dedup side (VERDICT r15 item 5: this was
-    the last iterative kernel without one). Near-dup components are
-    usually shallow, but a pathological near-dup CHAIN longer than the
-    fixed unroll (each doc a near-dup of the next — templated spam,
-    boilerplate drift) silently SPLITS a cluster at 100×; the planted
-    longer-than-unroll chain in tests/test_r15.py shows exactly that.
-    Labels are MONOTONE non-increasing under min-propagation, so the
-    convergence probe is a changed-count per round (the
-    operators/graph.component_labels_converged pattern), a fixpoint is
-    the exact component labeling, and ``max_iters`` FAILS LOUD on
-    exhaustion — a too-small bound must not silently ship split
-    clusters. Per-round lineage cut (operators/graph.cut_lineage —
-    reliable-checkpoint aware): the changed-count probe is a second
-    consumer of each round's labels, so the plan would otherwise
-    double per round."""
-    from .graph import cut_lineage
+    """Converged entry of :func:`connected_canonical`: rounds until no
+    label changes. Near-dup components are usually shallow, but a
+    near-dup CHAIN longer than the fixed unroll (each doc a near-dup
+    of the next — templated spam, boilerplate drift) would silently
+    SPLIT a cluster; the planted longer-than-unroll chain in
+    tests/test_r16.py shows exactly that. Labels are monotone
+    non-increasing, so the fixpoint is the exact component labeling,
+    and ``max_iters`` fails loud rather than shipping split
+    clusters."""
+    return _canonical(ids, pairs, id_col, max_rounds=max_iters)
 
-    e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    # lineage-cut like the per-round labels below: persist kept the
-    # full pair-pipeline plan under every round's join replanning
-    edges = cut_lineage(
-        e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+
+def _canonical(
+    ids: DataFrame,
+    pairs: DataFrame,
+    id_col: str,
+    rounds: int | None = None,
+    max_rounds: int = 64,
+    parts: int | None = None,
+) -> DataFrame:
+    sym = symmetrize(pairs, a="id_a", b="id_b").join(
+        ids.select(F.col(id_col).alias("dst")), "dst", "left_semi"
     )
-    labels = cut_lineage(
-        ids.select(F.col(id_col), F.col(id_col).alias("lab"))
+    labels = min_label_components(
+        sym,
+        ids.select(F.col(id_col).alias("node")),
+        rounds,
+        max_rounds,
+        parts,
+        name="connected_canonical_converged",
     )
-    for _ in range(max_iters):
-        nbr = (
-            edges.join(labels, edges.dst == labels[id_col])
-            .groupBy("src")
-            .agg(F.min("lab").alias("nbr_lab"))
-        )
-        # prev_lab rides the checkpointed round output (the left join
-        # already holds it — zero extra joins), so the convergence
-        # probe is a count-scan of materialized blocks instead of a
-        # doc-keyed join job per round (optimization r16, the
-        # operators/graph.component_round with_prev pattern)
-        new = cut_lineage(
-            labels.join(nbr, labels[id_col] == nbr.src, "left").select(
-                F.col(id_col),
-                F.least(
-                    F.col("lab"), F.coalesce(F.col("nbr_lab"), F.col("lab"))
-                ).alias("lab"),
-                F.col("lab").alias("prev_lab"),
-            )
-        )
-        changed = new.filter(F.col("lab") != F.col("prev_lab")).count()
-        labels = new.select(id_col, "lab")
-        if changed == 0:
-            return labels.select(
-                F.col(id_col),
-                F.col("lab").alias("canonical_id"),
-                (F.col(id_col) == F.col("lab")).alias("keep"),
-            )
-    raise RuntimeError(
-        f"connected_canonical_converged: labels still shrinking after "
-        f"max_iters={max_iters} — a near-dup chain longer than the bound "
-        "exists; raise max_iters rather than shipping split clusters"
+    return labels.select(
+        F.col("node").alias(id_col),
+        F.col("label").alias("canonical_id"),
+        (F.col("node") == F.col("label")).alias("keep"),
     )
 
 

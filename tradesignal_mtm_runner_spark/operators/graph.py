@@ -32,6 +32,14 @@ pair counts. The honest refresh story is rebuild-on-schedule from the
 (one) lineitem scan — the IVF/PQ frozen-model convention, documented
 rather than hidden.
 
+The iterative kernels (PageRank, k-core, k-truss, LPA, min-label
+connected components, the hop expansions, and the canonical-id CC in
+operators/dedup.py) all run through ONE round loop, :func:`fixpoint`:
+it owns the per-round lineage cut, the fixed unroll the SQL oracles
+mirror, and the converged mode with its fail-loud bound. Each kernel
+supplies only its step and its convergence probe; each public name
+is a thin fixed-round or converged entry over that loop.
+
 No counterpart in the pandas reference (reference runner_mtm.py:71 is
 the MTM loop); this is the warehouse/graph surface the build brief
 adds on top of it.
@@ -39,36 +47,25 @@ adds on top of it.
 
 from __future__ import annotations
 
+from functools import reduce
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..queries_r8 import _r9
+from ..functions.rounding import r9
 from ..sinks import ensure_table_absent, write_bucketed
 
 #: session conf key selecting the lineage-cut mechanism for the
 #: iterative graph kernels (see :func:`cut_lineage`)
 RELIABLE_CUTS_CONF = "spark.tradesignal.graph.reliableLineageCuts"
-#: session conf key: "true" makes :func:`cut_lineage` use
-#: ``localCheckpoint(eager=False)`` — the logical plan truncates the
-#: same way (LogicalRDD), but materialization defers to the first
-#: action, so fixed-iteration kernels (component_labels,
-#: connected_canonical, pagerank_scores) run their rounds inside ONE
-#: job instead of one blocking job per round, and building a query
-#: for explain/plan capture no longer executes it (ADVICE r16).
-#: Default stays eager: the r17 interleaved A/B (OPTIMIZATION_r17.md)
-#: measured lazy consistently faster only on the fixed-iteration
-#: dedup-CC chain at sf1 (~1.12x) and consistently SLOWER on the
-#: converged/refresh kernels at sf0.1 (their per-round changed-count
-#: forces the same materialization barrier, plus re-planning jitter)
-#: — the knob exists for tooling that wants construction to stay
-#: lazy and for cluster runs to re-evaluate.
-LAZY_CUTS_CONF = "spark.tradesignal.graph.lazyLineageCuts"
 
 
 def cut_lineage(df: DataFrame) -> DataFrame:
-    """Per-round LINEAGE CUT for the iterative kernels (k-core peeling,
-    LPA, the contracted mini-CC in queries_r10): each round references
-    its input relation twice, so the logical plan DOUBLES per round —
+    """LINEAGE CUT for the iterative kernels: :func:`fixpoint` cuts
+    every round's output, and the kernels cut their edge relations
+    once up front. A round references its input relation more than
+    once, so without a cut the logical plan DOUBLES per round —
     2^rounds copies of the upstream chain OOMs the OPTIMIZER, which
     persist() does not prevent (it caches data, not lineage).
 
@@ -90,17 +87,14 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     graph-sized snapshots per query in the checkpoint dir: set that
     conf to ``true`` alongside this flag (snapshots are then GC'd when
     their RDD is collected), or schedule periodic checkpoint-dir
-    cleanup (ADVICE r15). Fails loud if
-    the flag is set without a checkpoint dir: silently falling back to
-    the non-recoverable cut would defeat the flag's purpose."""
+    cleanup. Fails loud if the flag is set without a checkpoint dir:
+    silently falling back to the non-recoverable cut would defeat the
+    flag's purpose."""
     spark = df.sparkSession
     if (
         spark.conf.get(RELIABLE_CUTS_CONF, "false") or "false"
     ).lower() != "true":
-        lazy = (
-            spark.conf.get(LAZY_CUTS_CONF, "false") or "false"
-        ).lower() == "true"
-        return df.localCheckpoint(eager=not lazy)
+        return df.localCheckpoint(eager=True)
     if spark.sparkContext.getCheckpointDir() is None:
         raise ValueError(
             f"{RELIABLE_CUTS_CONF}=true but no checkpoint dir is set — "
@@ -109,6 +103,95 @@ def cut_lineage(df: DataFrame) -> DataFrame:
             "there"
         )
     return df.checkpoint(eager=True)
+
+
+def symmetrize(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    *carry,
+    a: str = "part_a",
+    b: str = "part_b",
+) -> DataFrame:
+    """Both directions of every undirected (``a``, ``b``) edge as
+    directed (``src``, ``dst``, ``*carry``) rows — the relation every
+    neighbour join reads. ``carry`` = extra columns (names or Columns)
+    copied onto both directions."""
+    return edges.select(F.col(a).alias(src), F.col(b).alias(dst), *carry).unionAll(
+        edges.select(F.col(b).alias(src), F.col(a).alias(dst), *carry)
+    )
+
+
+def fixpoint(
+    name: str,
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int | None = None,
+    max_rounds: int = 64,
+    done: Callable[[DataFrame, DataFrame], bool] | None = None,
+    stuck: str = "still changing",
+) -> DataFrame:
+    """The one round loop of every iterative kernel (PageRank, k-core,
+    k-truss, LPA, min-label CC and the hop expansions here; the
+    canonical-id CC in operators/dedup.py). Each round is
+    ``cut_lineage(step(state))``.
+
+    - Fixed mode (``rounds`` given): exactly ``rounds`` steps. This is
+      the unroll the SQL oracles mirror, so engine and oracle agree
+      even mid-convergence.
+    - Converged mode (``rounds=None``): steps until ``done(prev, new)``
+      says the round changed nothing. ``max_rounds`` steps without a
+      fixpoint raise RuntimeError named after the calling kernel
+      (``name``, with ``stuck`` saying what still moves): a too-small
+      bound must never ship a not-yet-converged result.
+
+    The probes stay with their kernels: :func:`labels_unchanged` for a
+    carried ``prev`` column (CC, LPA), :func:`count_unchanged` for
+    shrink-only relations (k-core, k-truss), and PageRank's L1 delta."""
+    for _ in range(max_rounds if rounds is None else rounds):
+        new = cut_lineage(step(state))
+        if rounds is None and done(state, new):
+            return new
+        state = new
+    if rounds is not None:
+        return state
+    raise RuntimeError(
+        f"{name}: no fixpoint within {max_rounds} rounds ({stuck}) — "
+        "raise the round bound; refusing to return a not-yet-converged "
+        "result"
+    )
+
+
+def labels_unchanged(prev: DataFrame, new: DataFrame) -> bool:
+    """Converged probe for label kernels whose round output carries
+    the round's input label as ``prev``: a count-scan of the cut round
+    output, no join."""
+    return new.filter(F.col("label") != F.col("prev")).count() == 0
+
+
+def count_unchanged() -> Callable[[DataFrame, DataFrame], bool]:
+    """Converged probe for shrink-only relations (k-core survivors,
+    k-truss edges): an unchanged count is an unchanged set. The probe
+    remembers the last count, so each round counts only its own
+    output."""
+    counts: list[int] = []
+
+    def done(prev: DataFrame, new: DataFrame) -> bool:
+        counts.append(new.count())
+        return counts[-1] == (counts[-2] if len(counts) > 1 else prev.count())
+
+    return done
+
+
+def batch_width(df: DataFrame) -> int:
+    """Stage width for a batch-sized relation: one partition per 64k
+    rows, capped at ``defaultParallelism``. At 32 cores the per-round
+    jobs of a kilobyte mini-CC otherwise run 32-task stages. Count
+    ``df`` after it is cut, so the count is a block scan."""
+    n = df.count()
+    return max(
+        1, min(df.sparkSession.sparkContext.defaultParallelism, -(-n // 65536))
+    )
 
 
 def pairs_from_baskets(baskets: DataFrame, min_sup: int | None = None) -> DataFrame:
@@ -283,7 +366,7 @@ def edge_embeddedness(edges: DataFrame, deg: DataFrame) -> DataFrame:
             F.col("part_b").cast("long").alias("part_b"),
             F.col("pair_cnt").cast("long").alias("pair_cnt"),
             nc.alias("n_common"),
-            _r9(
+            r9(
                 F.when(denom > 0, nc.cast("double") / denom).otherwise(
                     F.lit(0.0)
                 )
@@ -299,60 +382,12 @@ def pagerank_scores(
     iters: int,
 ) -> DataFrame:
     """Weighted PageRank over the symmetrized support-cut graph (the
-    B44 kernel — see copurchase_pagerank for the full plan argument):
-    transition probabilities w/wdeg built once, each iteration = one
-    join + one aggregate, ranks rounded to 9 dp per iteration so the
-    Spark and oracle fixed-point chains stay glued. ``edges`` =
-    (part_a, part_b, pair_cnt) undirected; ``wdeg`` = (pk, wdeg).
-    Returns (p_partkey, pagerank).
-
-    OPTIMIZATION r16 (guide §7.3 — plan size): trans/nodes are
-    LINEAGE-CUT (:func:`cut_lineage`) rather than persisted, and each
-    round's ranks are cut too — persist kept the full
-    lineitem→baskets→pairs plan under every round's join, so all of
-    the kernel's AQE stage materializations re-optimized that tree
-    (the dedup-CC finding applied to this kernel; the converged twin
-    below already cut its round outputs)."""
-    sym = edges.select(
-        F.col("part_a").alias("src"),
-        F.col("part_b").alias("dst"),
-        F.col("pair_cnt").alias("w"),
-    ).unionAll(
-        edges.select(
-            F.col("part_b").alias("src"),
-            F.col("part_a").alias("dst"),
-            F.col("pair_cnt").alias("w"),
-        )
-    )
-    trans = cut_lineage(
-        sym.join(wdeg.select(F.col("pk").alias("src"), "wdeg"), "src").select(
-            "src", "dst", (F.col("w") / F.col("wdeg")).alias("p")
-        )
-    )
-    nodes = cut_lineage(wdeg.select(F.col("pk").alias("node")))
-    n = nodes.count()  # bounded model scalar: |V| of the support-cut graph
-    ranks = nodes.select(
-        "node", _r9(F.lit(1.0) / F.lit(float(n))).alias("pagerank")
-    )
-    base = 1.0 - damp
-    for _ in range(iters):
-        incoming = (
-            trans.join(ranks, trans["src"] == ranks["node"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("pagerank") * F.col("p")).alias("mass"))
-        )
-        ranks = cut_lineage(
-            nodes.join(
-                incoming, nodes["node"] == incoming["dst"], "left"
-            ).select(
-                "node",
-                _r9(
-                    F.lit(base) / F.lit(float(n))
-                    + F.lit(damp) * F.coalesce(F.col("mass"), F.lit(0.0))
-                ).alias("pagerank"),
-            )
-        )
-    return ranks.select(F.col("node").alias("p_partkey"), "pagerank")
+    B44 kernel — see copurchase_pagerank for the full plan argument),
+    fixed-round entry: exactly ``iters`` rounds, mirrored by the SQL
+    oracle. ``edges`` = (part_a, part_b, pair_cnt) undirected;
+    ``wdeg`` = (pk, wdeg). Returns (p_partkey, pagerank). The round is
+    described at :func:`_pagerank`."""
+    return _pagerank(edges, wdeg, damp, rounds=iters)
 
 
 def pagerank_scores_converged(
@@ -362,136 +397,106 @@ def pagerank_scores_converged(
     tol: float = 1e-7,
     max_iters: int = 100,
 ) -> DataFrame:
-    """Production iterate-to-CONVERGENCE form of :func:`pagerank_scores`
-    (completing the VERDICT r14 item 3 set: every iterative kernel —
-    peel, LPA, CC, and now PageRank — has a fixpoint twin beside its
-    oracle-mirrored fixed unroll). PageRank converges geometrically at
-    rate ``damp``, so a fixed iteration count tuned at test scale can
-    be far from the fixpoint on a larger or more hub-concentrated
-    graph. This form iterates until the L1 delta Σ|r_new − r_old|
-    drops below ``tol`` — one graph-sized join + aggregate for the
-    step and one node-keyed join + sum for the delta per iteration
-    (same asymptotic shape as the step itself), ranks rounded to 9 dp
-    per iteration exactly like the fixed kernel so the two forms walk
-    the same chain. Because iterates are 9 dp-QUANTIZED, an L1 delta
-    below n*5e-10 would effectively demand an exact fixpoint of the
-    rounded map — which can 2-cycle and exhaust ``max_iters`` on very
-    large or hub-concentrated graphs (ADVICE r15) — so the effective
-    tolerance is clamped to ``max(tol, n * 1e-9)``: one quantum of
-    rounding slack per node. Lineage cuts per iteration (:func:`cut_lineage`):
-    unlike the fixed unroll, the rank relation here is referenced
-    twice per round (step + delta), the plan-doubling shape. FAILS
-    LOUD on ``max_iters`` exhaustion rather than returning a
-    not-yet-converged ranking."""
-    sym = edges.select(
-        F.col("part_a").alias("src"),
-        F.col("part_b").alias("dst"),
-        F.col("pair_cnt").alias("w"),
-    ).unionAll(
-        edges.select(
-            F.col("part_b").alias("src"),
-            F.col("part_a").alias("dst"),
-            F.col("pair_cnt").alias("w"),
-        )
-    )
-    # lineage-cut like the round outputs below (optimization r16):
-    # persist kept the full upstream plan under every round's replan
+    """Converged entry of :func:`pagerank_scores`: rounds until the L1
+    delta Σ|r_new − r_old| drops below ``max(tol, n·1e-9)``. PageRank
+    converges geometrically at rate ``damp``, so a round count tuned
+    at test scale can be far from the fixpoint on a larger or more
+    hub-concentrated graph. Fails loud after ``max_iters`` rounds."""
+    return _pagerank(edges, wdeg, damp, tol=tol, max_rounds=max_iters)
+
+
+def _pagerank(
+    edges: DataFrame,
+    wdeg: DataFrame,
+    damp: float,
+    rounds: int | None = None,
+    tol: float = 1e-7,
+    max_rounds: int = 100,
+) -> DataFrame:
+    """Both PageRank entries over :func:`fixpoint`. Transition
+    probabilities w/wdeg and the node set are built and cut once;
+    each round is one join + one aggregate + one node-keyed left join,
+    ranks rounded to 9 dp per round so the Spark and oracle chains
+    stay glued. The converged probe is the L1 delta: one node-keyed
+    join + sum per round. Iterates are 9 dp-QUANTIZED, so a delta
+    below n·5e-10 would demand an exact fixpoint of the rounded map,
+    which can 2-cycle; the tolerance is therefore clamped to
+    ``max(tol, n·1e-9)``, one quantum of rounding slack per node. An
+    empty graph returns the empty ranking."""
     trans = cut_lineage(
-        sym.join(wdeg.select(F.col("pk").alias("src"), "wdeg"), "src").select(
-            "src", "dst", (F.col("w") / F.col("wdeg")).alias("p")
-        )
+        symmetrize(edges, "src", "dst", F.col("pair_cnt").alias("w"))
+        .join(wdeg.select(F.col("pk").alias("src"), "wdeg"), "src")
+        .select("src", "dst", (F.col("w") / F.col("wdeg")).alias("p"))
     )
     nodes = cut_lineage(wdeg.select(F.col("pk").alias("node")))
     n = nodes.count()  # bounded model scalar: |V| of the support-cut graph
     if n == 0:
-        # empty graph: the fixpoint is the empty ranking — exit like
-        # the fixed kernel and the other *_converged twins instead of
-        # burning max_iters empty delta checks (review r15: the L1
-        # aggregate over zero rows is NULL, which reads as
-        # not-converged)
         return nodes.select(
-            F.col("node").alias("p_partkey"),
-            F.lit(0.0).alias("pagerank"),
+            F.col("node").alias("p_partkey"), F.lit(0.0).alias("pagerank")
         )
-    ranks = cut_lineage(
-        nodes.select(
-            "node", _r9(F.lit(1.0) / F.lit(float(n))).alias("pagerank")
-        )
-    )
-    # quantization clamp (see docstring): below one 1e-9 rounding
-    # quantum per node the rounded map need not have a reachable
-    # fixpoint at all
     tol = max(tol, float(n) * 1e-9)
     base = 1.0 - damp
-    for _ in range(max_iters):
+
+    def step(ranks: DataFrame) -> DataFrame:
         incoming = (
             trans.join(ranks, trans["src"] == ranks["node"])
             .groupBy("dst")
             .agg(F.sum(F.col("pagerank") * F.col("p")).alias("mass"))
         )
-        new = cut_lineage(
-            nodes.join(
-                incoming, nodes["node"] == incoming["dst"], "left"
-            ).select(
-                "node",
-                _r9(
-                    F.lit(base) / F.lit(float(n))
-                    + F.lit(damp) * F.coalesce(F.col("mass"), F.lit(0.0))
-                ).alias("pagerank"),
-            )
+        return nodes.join(
+            incoming, nodes["node"] == incoming["dst"], "left"
+        ).select(
+            "node",
+            r9(
+                F.lit(base) / F.lit(float(n))
+                + F.lit(damp) * F.coalesce(F.col("mass"), F.lit(0.0))
+            ).alias("pagerank"),
         )
+
+    def l1_below_tol(prev: DataFrame, new: DataFrame) -> bool:
         delta = (
-            new.join(
-                ranks.select("node", F.col("pagerank").alias("prev")), "node"
-            )
+            new.join(prev.select("node", F.col("pagerank").alias("prev")), "node")
             .agg(F.sum(F.abs(F.col("pagerank") - F.col("prev"))).alias("d"))
             .collect()[0]["d"]
         )
-        ranks = new
-        if delta is not None and delta < tol:
-            return ranks.select(F.col("node").alias("p_partkey"), "pagerank")
-    raise RuntimeError(
-        f"pagerank_scores_converged: L1 delta still >= {tol} after "
-        f"max_iters={max_iters} — raise max_iters or loosen tol; "
-        "refusing to return a not-yet-converged ranking"
+        return delta is not None and delta < tol
+
+    ranks = fixpoint(
+        "pagerank_scores_converged",
+        nodes.select("node", r9(F.lit(1.0) / F.lit(float(n))).alias("pagerank")),
+        step,
+        rounds,
+        max_rounds,
+        l1_below_tol,
+        f"L1 delta still >= {tol}",
     )
+    return ranks.select(F.col("node").alias("p_partkey"), "pagerank")
 
 
 def kcore_members(edges: DataFrame, k: int, peels: int) -> DataFrame:
     """k-core membership via ITERATED SIMULTANEOUS PEELING — the
     fourth classic distributed graph computation beside CC label
     propagation, PageRank and oriented triangle counting. Each round
-    drops EVERY node whose degree within the surviving set is < k;
-    after enough rounds the survivors are exactly the k-core (the
-    maximal subgraph of minimum degree ≥ k). Simultaneous (round-
-    synchronous) deletion is the distributed form: rounds needed =
-    the graph's peel DEPTH, which is small in practice (≤5 across the
-    test SFs — pinned convergent at ``peels`` with one spare round),
-    while the sequential min-degree peel would be |V| driver round
-    trips. Each round is two semi-joins (restrict the symmetrized
-    edge list to survivors) + one aggregate, all partial-agg
-    friendly; survivors persist per round (the CC convention —
-    operators/dedup.py connected_canonical — else round r re-executes
-    rounds 1..r-1 per consumer). A fixed ``peels`` is mirrored
-    exactly by the SQL oracle, so engine/oracle equality holds even
-    mid-convergence; CONVERGENCE itself is the separate pinned claim
-    (tests/test_r14.py: one more round changes nothing).
+    (:func:`kcore_round`) drops EVERY node whose degree within the
+    surviving set is < k; after enough rounds the survivors are
+    exactly the k-core (the maximal subgraph of minimum degree ≥ k).
+    Simultaneous (round-synchronous) deletion is the distributed form:
+    rounds needed = the graph's peel DEPTH, small in practice (≤5
+    across the test SFs), while the sequential min-degree peel would
+    be |V| sequential rounds. Each round is two semi-joins (restrict
+    the symmetrized edge list to survivors) + one aggregate, all
+    partial-agg friendly.
+
+    Fixed-round entry: exactly ``peels`` rounds, mirrored by the SQL
+    oracle; :func:`kcore_members_converged` is the converged entry,
+    and both run through :func:`fixpoint`. The symmetrized edge list
+    is cut once up front, so the live query's lineitem→basket→pair
+    chain runs exactly once.
 
     ``edges`` = undirected (part_a, part_b [, ...]); returns
     (part, core_deg) for k-core members, core_deg = the member's
     degree WITHIN the core. ``peels`` must be ≥ 1 (the survivor
     relation only carries core_deg after a round has run).
-
-    LINEAGE CUTS, not persists: each round references the survivor
-    set TWICE (both endpoints of every edge must survive), so the
-    logical plan DOUBLES per round — 2^peels copies of the upstream
-    chain OOMs the optimizer (a 2 GB plan string at peels=8), which
-    persist() does not prevent (it caches data, not lineage). The
-    contracted-CC precedent (queries_r10) applies: an eager
-    localCheckpoint per round materializes a graph-sized survivor set
-    (kilobytes at any sane k) and keeps every round's plan constant-
-    size. The edge list gets one cut up front so the live query's
-    lineitem→basket→pair chain runs exactly once.
 
     Caller contract (family-wide, also community_labels /
     clustering_coefficients / link_predictions): ``edges`` is the
@@ -503,64 +508,34 @@ def kcore_members(edges: DataFrame, k: int, peels: int) -> DataFrame:
             f"kcore_members: peels must be >= 1 (got {peels}) — the "
             "survivor relation only carries core_deg after a round"
         )
-    sym = cut_lineage(
-        edges.select(
-            F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-        ).unionAll(
-            edges.select(
-                F.col("part_b").alias("src"), F.col("part_a").alias("dst")
-            )
-        )
-    )
-    cur = sym.select("src").distinct()
-    for _ in range(peels):
-        cur = cut_lineage(kcore_round(sym, cur, k))
-    return cur.select(F.col("src").cast("long").alias("part"), "core_deg")
+    return _kcore(edges, k, rounds=peels)
 
 
 def kcore_members_converged(
     edges: DataFrame, k: int, max_peels: int = 64
 ) -> DataFrame:
-    """Production iterate-to-FIXPOINT form of :func:`kcore_members`
-    (VERDICT r14 item 3): the fixed-unroll entry exists so the SQL
-    oracle can mirror the exact round count, but peel DEPTH grows with
-    graph density — at 100× a fixed unroll can silently ship a
-    not-yet-converged (too large) "core". This form peels until a
-    round drops NO node, then returns. Survivor sets are MONOTONE
-    decreasing, so an unchanged survivor COUNT is an unchanged
-    survivor SET is the fixpoint — one bounded driver-side count per
-    round is the convergence probe (rounds = peel depth, the same
-    small number that bounds the fixed unroll; the count is the price
-    of not knowing the depth up front). ``max_peels`` bounds the loop
-    and FAILS LOUD on exhaustion — returning the mid-peel state would
-    be exactly the silent under-convergence this entry exists to
-    prevent. Converged == fixed-unroll at the test SFs is pinned in
-    tests/test_r15.py, alongside a planted deeper-than-KCORE_PEELS
-    graph that the fixed unroll provably under-peels."""
-    sym = cut_lineage(
-        edges.select(
-            F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-        ).unionAll(
-            edges.select(
-                F.col("part_b").alias("src"), F.col("part_a").alias("dst")
-            )
-        )
+    """Converged entry of :func:`kcore_members`: peels until a round
+    drops no node. Peel depth grows with graph density, so a fixed
+    unroll can ship a not-yet-converged (too large) core. Survivor
+    sets are MONOTONE decreasing, so the probe is
+    :func:`count_unchanged`. Fails loud after ``max_peels`` rounds."""
+    return _kcore(edges, k, max_rounds=max_peels)
+
+
+def _kcore(
+    edges: DataFrame, k: int, rounds: int | None = None, max_rounds: int = 64
+) -> DataFrame:
+    sym = cut_lineage(symmetrize(edges))
+    core = fixpoint(
+        "kcore_members_converged",
+        sym.select("src").distinct(),
+        lambda cur: kcore_round(sym, cur, k),
+        rounds,
+        max_rounds,
+        count_unchanged(),
+        "survivors still dropping",
     )
-    cur = sym.select("src").distinct()
-    prev_n = cur.count()  # bounded scalar: |V| of the support-cut graph
-    for _ in range(max_peels):
-        cur = cut_lineage(kcore_round(sym, cur, k))
-        n = cur.count()
-        if n == prev_n:
-            return cur.select(
-                F.col("src").cast("long").alias("part"), "core_deg"
-            )
-        prev_n = n
-    raise RuntimeError(
-        f"kcore_members_converged: no fixpoint within max_peels="
-        f"{max_peels} (still {prev_n} survivors) — raise max_peels; "
-        "refusing to return a not-yet-converged core"
-    )
+    return core.select(F.col("src").cast("long").alias("part"), "core_deg")
 
 
 def kcore_round(sym: DataFrame, survivors: DataFrame, k: int) -> DataFrame:
@@ -612,19 +587,15 @@ def ktruss_edges(edges: DataFrame, k: int, peels: int) -> DataFrame:
     3-truss, which is why truss filtering is the standard community
     pre-screen one notch stronger than core filtering.
 
-    Round structure mirrors :func:`kcore_members`: each round
-    recomputes per-edge triangle support over the survivors (the
-    SHARED oriented enumeration — O(√E) wedges, each triangle once,
-    three row-local edge credits, one edge-keyed count) and drops
-    every edge below k−2 SIMULTANEOUSLY; rounds needed = the truss
-    peel depth (≤ 2 across the test SFs — the support cut already
-    prunes most low-support edges). A fixed ``peels`` is mirrored
-    EXACTLY by the SQL oracle (engine/oracle equality even
-    mid-convergence, the house convention); convergence is the
-    separate pinned claim (one more round changes nothing,
-    tests/test_r17.py). Per-round lineage cuts per the k-core
-    argument (each round references the survivor set three times —
-    the plan would triple per round).
+    Each round (:func:`ktruss_round`) recomputes per-edge triangle
+    support over the survivors (the SHARED oriented enumeration —
+    O(√E) wedges, each triangle once, three row-local edge credits,
+    one edge-keyed count) and drops every edge below k−2
+    SIMULTANEOUSLY; rounds needed = the truss peel depth (≤ 2 across
+    the test SFs — the support cut already prunes most low-support
+    edges). Fixed-round entry: exactly ``peels`` rounds, mirrored by
+    the SQL oracle; :func:`ktruss_edges_converged` is the converged
+    entry, and both run through :func:`fixpoint`.
 
     ``edges`` = canonical undirected (part_a, part_b [, ...]),
     part_a < part_b, no duplicates. Returns (part_a, part_b,
@@ -632,62 +603,48 @@ def ktruss_edges(edges: DataFrame, k: int, peels: int) -> DataFrame:
     k ≥ 3 (a 2-truss is every edge — the peel's implicit
     zero-triangle drop would be wrong) and peels ≥ 1 (the survivor
     relation only carries truss_sup after a round)."""
+    if peels < 1:
+        raise ValueError(
+            f"ktruss_edges: peels must be >= 1 (got {peels}) — the "
+            "survivor relation only carries truss_sup after a round"
+        )
+    return _ktruss(edges, k, rounds=peels)
+
+
+def ktruss_edges_converged(
+    edges: DataFrame, k: int, max_peels: int = 64
+) -> DataFrame:
+    """Converged entry of :func:`ktruss_edges`: peels until a round
+    drops no edge. Truss peel depth grows with graph structure, so a
+    fixed unroll can ship a not-yet-converged (too large) truss —
+    the live sf0.001 graph at k=4 already peels 5 rounds deep.
+    Survivor edge sets are MONOTONE decreasing, so the probe is
+    :func:`count_unchanged`. Fails loud after ``max_peels`` rounds."""
+    return _ktruss(edges, k, max_rounds=max_peels)
+
+
+def _ktruss(
+    edges: DataFrame, k: int, rounds: int | None = None, max_rounds: int = 64
+) -> DataFrame:
     if k < 3:
         raise ValueError(
             f"ktruss_edges: k must be >= 3 (got {k}) — the 2-truss is "
             "the whole graph and the peel's zero-triangle drop would "
             "miscount it"
         )
-    if peels < 1:
-        raise ValueError(
-            f"ktruss_edges: peels must be >= 1 (got {peels}) — the "
-            "survivor relation only carries truss_sup after a round"
-        )
-    cur = cut_lineage(edges.select("part_a", "part_b"))
-    for _ in range(peels):
-        cur = cut_lineage(ktruss_round(cur, k))
-    return cur.select(
+    truss = fixpoint(
+        "ktruss_edges_converged",
+        cut_lineage(edges.select("part_a", "part_b")),
+        lambda cur: ktruss_round(cur, k),
+        rounds,
+        max_rounds,
+        count_unchanged(),
+        "edges still dropping",
+    )
+    return truss.select(
         F.col("part_a").cast("long").alias("part_a"),
         F.col("part_b").cast("long").alias("part_b"),
         F.col("truss_sup").cast("long").alias("truss_sup"),
-    )
-
-
-def ktruss_edges_converged(
-    edges: DataFrame, k: int, max_peels: int = 64
-) -> DataFrame:
-    """Production iterate-to-FIXPOINT form of :func:`ktruss_edges`
-    (the family convention — every iterative kernel ships both): the
-    fixed unroll exists so the SQL oracle can mirror the exact round
-    count, but truss peel depth grows with graph structure — at 100×
-    a fixed unroll can ship a not-yet-converged (too large) "truss".
-    Survivor edge sets are MONOTONE decreasing, so an unchanged edge
-    COUNT is an unchanged edge SET is the fixpoint — one bounded
-    driver-side count per round is the convergence probe. FAILS LOUD
-    on ``max_peels`` exhaustion (returning the mid-peel state would
-    be the silent under-convergence this entry prevents). Converged
-    == fixed-unroll at the test SFs for the live k, and the live
-    sf0.001 graph at k=4 (peel depth 5 > the k=3 unroll — the fixed
-    form provably ships 2 extra edges there) are pinned in
-    tests/test_r17.py."""
-    if k < 3:
-        raise ValueError(f"ktruss_edges_converged: k must be >= 3 (got {k})")
-    cur = cut_lineage(edges.select("part_a", "part_b"))
-    prev_n = cur.count()  # bounded scalar: |E| of the support-cut graph
-    for _ in range(max_peels):
-        cur = cut_lineage(ktruss_round(cur, k))
-        n = cur.count()
-        if n == prev_n:
-            return cur.select(
-                F.col("part_a").cast("long").alias("part_a"),
-                F.col("part_b").cast("long").alias("part_b"),
-                F.col("truss_sup").cast("long").alias("truss_sup"),
-            )
-        prev_n = n
-    raise RuntimeError(
-        f"ktruss_edges_converged: no fixpoint within max_peels="
-        f"{max_peels} (still {prev_n} edges) — raise max_peels; "
-        "refusing to return a not-yet-converged truss"
     )
 
 
@@ -703,53 +660,45 @@ def reach_counts(edges: DataFrame, hops: int) -> DataFrame:
     saturates at n per node of its component — O(n²) rows on a
     connected graph. That is the hop-plot's DEFINING object, so the
     exact form is inherently quadratic: it is the ORACLE-GROUNDABLE
-    twin (DuckDB mirrors the same unroll) and stays cheap on the
+    form (DuckDB mirrors the same unroll) and stays cheap on the
     support-cut graphs (≤ 0.5 M reach rows at the bench SFs, hops
     fixed); the 100× production path is :func:`hyperball_counts` —
     the Boldi–Vigna HyperBall sketch propagation at O(n·m_registers)
     rows per round — whose tolerance against THIS form is pinned in
-    tests/test_r17.py. Per-round lineage cuts per the family
-    convention (R_t feeds both the union and the expansion join).
+    tests/test_r17.py. The hops run through :func:`fixpoint` in fixed
+    mode (R_t feeds both the union and the expansion join, so each
+    round is cut); each round's input feeds its hop's count.
 
     ``edges`` = canonical undirected (part_a, part_b [, ...]);
     returns (part, hop, n_reach), one row per node per hop 0..hops,
     all BIGINT."""
     if hops < 1:
         raise ValueError(f"reach_counts: hops must be >= 1 (got {hops})")
-    sym = cut_lineage(
-        edges.select(
-            F.col("part_a").alias("u"), F.col("part_b").alias("v")
-        ).unionAll(
-            edges.select(F.col("part_b").alias("u"), F.col("part_a").alias("v"))
-        )
-    )
-    reach = sym.select(F.col("u").alias("src")).distinct().select(
-        "src", F.col("src").alias("dst")
-    )
-    out = [
-        reach.groupBy("src").agg(
-            F.count(F.lit(1)).cast("long").alias("n_reach")
-        ).select("src", F.lit(0).cast("long").alias("hop"), "n_reach")
-    ]
+    sym = cut_lineage(symmetrize(edges, "u", "v"))
     hop_edges = sym.select(
         F.col("u").alias("_mid"), F.col("v").alias("_nxt")
     )
-    for t in range(1, hops + 1):
+    out: list[DataFrame] = []
+
+    def n_reach(reach: DataFrame) -> DataFrame:
+        return reach.groupBy("src").agg(
+            F.count(F.lit(1)).cast("long").alias("n_reach")
+        ).select("src", F.lit(len(out)).cast("long").alias("hop"), "n_reach")
+
+    def step(reach: DataFrame) -> DataFrame:
+        out.append(n_reach(reach))  # the round's input is hop len(out)
         expanded = (
             reach.select("src", F.col("dst").alias("_mid"))
             .join(hop_edges, "_mid")
             .select("src", F.col("_nxt").alias("dst"))
         )
-        reach = cut_lineage(reach.unionAll(expanded).distinct())
-        out.append(
-            reach.groupBy("src").agg(
-                F.count(F.lit(1)).cast("long").alias("n_reach")
-            ).select("src", F.lit(t).cast("long").alias("hop"), "n_reach")
-        )
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionAll(df)
-    return res.select(
+        return reach.unionAll(expanded).distinct()
+
+    reach = sym.select(F.col("u").alias("src")).distinct().select(
+        "src", F.col("src").alias("dst")
+    )
+    out.append(n_reach(fixpoint("reach_counts", reach, step, rounds=hops)))
+    return reduce(DataFrame.unionAll, out).select(
         F.col("src").cast("long").alias("part"), "hop", "n_reach"
     )
 
@@ -818,156 +767,112 @@ def hyperball_counts(edges: DataFrame, hops: int) -> DataFrame:
     combinable, O(n·m) rows per round bounded by min(m, |ball|)
     registers per node, rounds = hops. No UDF, no driver data, no
     quadratic reach relation — this is the form that runs at 100×,
-    where :func:`reach_counts` (the exact, oracle-checkable twin) is
+    where :func:`reach_counts` (the exact, oracle-checkable form) is
     inherently O(n²). DETERMINISTIC: register placement rides
-    xxhash64, so both runs and both twins of a tolerance pin agree
-    bit-for-bit. Per-round lineage cuts per the family convention.
+    xxhash64, so both runs and both sides of a tolerance pin agree
+    bit-for-bit. The hops run through :func:`fixpoint` in fixed mode;
+    each round's input feeds its hop's estimate.
 
     Returns (part, hop, est_reach) for hop 0..hops — est_reach
     DOUBLE (a sketch estimate; median relative error vs the exact
-    twin ≈ the 13 % HLL bound, pinned in tests/test_r17.py)."""
+    form ≈ the 13 % HLL bound, pinned in tests/test_r17.py)."""
     if hops < 1:
         raise ValueError(f"hyperball_counts: hops must be >= 1 (got {hops})")
-    sym = cut_lineage(
-        edges.select(
-            F.col("part_a").alias("u"), F.col("part_b").alias("nbr")
-        ).unionAll(
-            edges.select(
-                F.col("part_b").alias("u"), F.col("part_a").alias("nbr")
-            )
-        )
-    )
+    sym = cut_lineage(symmetrize(edges, "u", "nbr"))
     nodes = sym.select(F.col("u").alias("node")).distinct()
-    sk = cut_lineage(_hb_singletons(nodes))
     push = sym.select(F.col("u").alias("node"), F.col("nbr").alias("_to"))
-    out = [_hb_estimate(sk, 0)]
-    for t in range(1, hops + 1):
+    out: list[DataFrame] = []
+
+    def step(sk: DataFrame) -> DataFrame:
+        out.append(_hb_estimate(sk, len(out)))  # the round's input hop
         merged = sk.unionAll(
             sk.join(push, "node").select(
                 F.col("_to").alias("node"), "j", "v"
             )
         )
-        sk = cut_lineage(
-            merged.groupBy("node", "j").agg(F.max("v").alias("v"))
-        )
-        out.append(_hb_estimate(sk, t))
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionAll(df)
-    return res
+        return merged.groupBy("node", "j").agg(F.max("v").alias("v"))
+
+    sk = fixpoint(
+        "hyperball_counts", cut_lineage(_hb_singletons(nodes)), step, rounds=hops
+    )
+    out.append(_hb_estimate(sk, hops))
+    return reduce(DataFrame.unionAll, out)
 
 
 def community_labels(edges: DataFrame, rounds: int) -> DataFrame:
     """Community detection via SYNCHRONOUS LABEL PROPAGATION with a
     self-vote — the fifth classic distributed graph computation in the
     family (CC label propagation, PageRank, oriented triangles,
-    k-core peeling, and now LPA communities: "which items form a
+    k-core peeling, and LPA communities: "which items form a
     cross-sold cluster" is the modularity-free community question
     production recommenders actually ask).
 
-    Each round, every node adopts the label with the MOST votes among
-    {its neighbors' current labels} ∪ {its own current label}, ties
-    broken toward the SMALLEST label — fully deterministic, so a fixed
-    ``rounds`` is mirrored exactly by the SQL oracle. The self-vote is
-    load-bearing: plain synchronous LPA two-cycles on sparse/bipartite
-    regions (measured on the sf0.01 co-purchase graph: still >1400
-    flips/round after 15 rounds), while the self-inclusive vote
-    converges in ≤7 rounds on every test SF — convergence itself is
-    the separately pinned claim (tests/test_r14b.py: one more round
-    changes nothing), the Spark/oracle equality holds even
-    mid-convergence by the fixed unroll.
+    Each round (:func:`lpa_round`), every node adopts the label with
+    the MOST votes among {its neighbors' current labels} ∪ {its own
+    current label}, ties broken toward the SMALLEST label — fully
+    deterministic, so a fixed ``rounds`` is mirrored exactly by the
+    SQL oracle. The self-vote is load-bearing: plain synchronous LPA
+    two-cycles on sparse/bipartite regions (measured on the sf0.01
+    co-purchase graph: still >1400 flips/round after 15 rounds), while
+    the self-inclusive vote converges in ≤7 rounds on every test SF.
 
-    Scale shape: per round, one graph-sized equi-join (labels onto the
-    symmetrized edge list), one (node, label) vote count with map-side
-    partials, one node-partitioned top-1 window — all graph-sized,
-    nothing driver-side. The label relation is referenced TWICE per
-    round (neighbor votes + self-vote), so the logical plan doubles
-    per round: lineage CUTS per round (localCheckpoint, the
-    k-core/contracted-CC convention), not persists. Returns
-    (part, community); community ids are the propagated node ids (the
-    min-tie-break makes each community's label a stable member id,
-    typically its smallest)."""
+    Fixed-round entry: exactly ``rounds`` rounds;
+    :func:`community_labels_converged` is the converged entry, and
+    both run through :func:`fixpoint`. Per round: one graph-sized
+    equi-join (labels onto the symmetrized edge list), one
+    (node, label) vote count with map-side partials, one
+    node-partitioned top-1 window — all graph-sized, nothing
+    collected. Returns (part, community); community ids are the
+    propagated node ids (the min-tie-break makes each community's
+    label a stable member id, typically its smallest)."""
     if rounds < 1:
         raise ValueError(
             f"community_labels: rounds must be >= 1 (got {rounds})"
         )
-    sym = cut_lineage(
-        edges.select(
-            F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-        ).unionAll(
-            edges.select(
-                F.col("part_b").alias("src"), F.col("part_a").alias("dst")
-            )
-        )
-    )
-    labels = (
-        sym.select("src").distinct().select(
-            F.col("src").alias("node"), F.col("src").alias("label")
-        )
-    )
-    for _ in range(rounds):
-        labels = cut_lineage(lpa_round(sym, labels))
-    return labels.select(
-        F.col("node").cast("long").alias("part"),
-        F.col("label").cast("long").alias("community"),
-    )
+    return _communities(edges, rounds=rounds)
 
 
 def community_labels_converged(
     edges: DataFrame, max_rounds: int = 64
 ) -> DataFrame:
-    """Production iterate-to-FIXPOINT form of :func:`community_labels`
-    (VERDICT r14 item 3): LPA convergence depth grows with graph
-    density, so a fixed unroll can silently ship a mid-propagation
-    labeling at 100×. This form runs :func:`lpa_round` until a round
-    flips NO label. Labels are not monotone (unlike the peel's
-    survivor sets), so the convergence probe is an explicit
-    changed-count: one graph-sized prev-vs-new join + count per round
-    — same asymptotic shape as the round itself. The self-vote makes
-    every observed graph converge (plain synchronous LPA two-cycles;
-    see :func:`community_labels`), but no theorem guarantees it on
-    adversarial inputs, so ``max_rounds`` bounds the loop and FAILS
-    LOUD on exhaustion rather than returning an oscillating state.
-    Converged == fixed-unroll at the test SFs is pinned in
-    tests/test_r15.py."""
-    sym = cut_lineage(
-        edges.select(
-            F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-        ).unionAll(
-            edges.select(
-                F.col("part_b").alias("src"), F.col("part_a").alias("dst")
+    """Converged entry of :func:`community_labels`: rounds until no
+    label flips. Labels are not monotone, so each round joins its
+    input label on as ``prev`` inside the same cut (LPA's top-1 window
+    cannot carry it through) and the probe is
+    :func:`labels_unchanged`. The self-vote made every observed graph
+    converge, but no theorem guarantees it on adversarial inputs, so
+    the loop fails loud after ``max_rounds`` rather than returning an
+    oscillating state."""
+    return _communities(edges, max_rounds=max_rounds)
+
+
+def _communities(
+    edges: DataFrame, rounds: int | None = None, max_rounds: int = 64
+) -> DataFrame:
+    sym = cut_lineage(symmetrize(edges))
+
+    def step(labels: DataFrame) -> DataFrame:
+        new = lpa_round(sym, labels.select("node", "label"))
+        if rounds is None:
+            new = new.join(
+                labels.select("node", F.col("label").alias("prev")), "node"
             )
-        )
+        return new
+
+    labels = fixpoint(
+        "community_labels_converged",
+        sym.select(F.col("src").alias("node")).distinct().select(
+            "node", F.col("node").alias("label")
+        ),
+        step,
+        rounds,
+        max_rounds,
+        labels_unchanged,
+        "labels still flipping",
     )
-    labels = cut_lineage(
-        sym.select("src").distinct().select(
-            F.col("src").alias("node"), F.col("src").alias("label")
-        )
-    )
-    for _ in range(max_rounds):
-        # the prev-label join runs INSIDE the checkpoint job (one job
-        # per round instead of step + probe-join jobs), so the changed
-        # probe is a count-scan of the materialized blocks
-        # (optimization r16 — the component_round with_prev pattern;
-        # LPA's top-1 window can't carry its input label through, so
-        # the join stays but rides the same materialization)
-        new = cut_lineage(
-            lpa_round(sym, labels).join(
-                labels.select("node", F.col("label").alias("prev_label")),
-                "node",
-            )
-        )
-        changed = new.filter(F.col("label") != F.col("prev_label")).count()
-        labels = new.select("node", "label")
-        if changed == 0:
-            return labels.select(
-                F.col("node").cast("long").alias("part"),
-                F.col("label").cast("long").alias("community"),
-            )
-    raise RuntimeError(
-        f"community_labels_converged: labels still flipping after "
-        f"max_rounds={max_rounds} — raise max_rounds (or the graph "
-        "oscillates); refusing to return a mid-propagation labeling"
+    return labels.select(
+        F.col("node").cast("long").alias("part"),
+        F.col("label").cast("long").alias("community"),
     )
 
 
@@ -994,146 +899,110 @@ def lpa_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
 
 
 def component_round(
-    sym: DataFrame, labels: DataFrame, with_prev: bool = False
+    sym: DataFrame, labels: DataFrame, parts: int | None = None
 ) -> DataFrame:
-    """One min-label propagation round: every node takes the minimum
-    of its own label and its neighbors' labels. ``sym`` = directed
-    symmetrized edges (src, dst); ``labels`` = (node, label). Exposed
-    separately (the kcore_round/lpa_round convention) so the per-round
-    plan can be pinned and the converged form can loop it.
+    """One min-label round, the step of every connected-components
+    kernel (:func:`component_labels*`, :func:`components_refresh`'s
+    mini-CC, operators/dedup.py ``connected_canonical*``): every node
+    takes the minimum over its own label and its neighbors' labels —
+    one join plus one aggregate over a union. The round's input label
+    rides the same aggregate: own rows carry ``prev = label``,
+    neighbor rows carry null, and ``max(prev)`` recovers it, so the
+    converged probe (:func:`labels_unchanged`) is a scan of the round
+    output. ``sym`` = directed symmetrized edges (src, dst) whose
+    every dst is a labelled node; ``labels`` = (node, label [, prev]);
+    returns (node, label, prev). ``parts`` repartitions the union to
+    that many partitions on node, which sets the aggregate's stage
+    width without touching the session conf."""
+    nbr = sym.join(
+        labels.select(F.col("node").alias("src"), "label"), "src"
+    ).select(F.col("dst").alias("node"), "label")
+    votes = labels.select(
+        "node", "label", F.col("label").alias("prev")
+    ).unionByName(nbr, allowMissingColumns=True)
+    if parts is not None:
+        votes = votes.repartition(parts, "node")
+    return votes.groupBy("node").agg(
+        F.min("label").alias("label"), F.max("prev").alias("prev")
+    )
 
-    ``with_prev=True`` additionally emits the round's INPUT label as
-    ``prev_label`` — zero extra joins (the left join already holds it)
-    — so the converged form's changed-count probe is a scan over the
-    checkpointed round output instead of a second labels join + count
-    job per round (optimization r16, guide §2.4: the probe was a full
-    extra node-keyed shuffle per round)."""
-    nbr = (
-        sym.join(labels.select(F.col("node").alias("src"), "label"), "src")
-        .groupBy("dst")
-        .agg(F.min("label").alias("nbr_label"))
+
+def min_label_components(
+    sym: DataFrame,
+    nodes: DataFrame | None = None,
+    rounds: int | None = None,
+    max_rounds: int = 64,
+    parts: int | None = None,
+    name: str = "component_labels_converged",
+) -> DataFrame:
+    """Min-label connected components over :func:`fixpoint` with
+    :func:`component_round` — the body shared by the graph and dedup
+    CC entries. ``sym`` = directed (src, dst) edges, cut here once
+    (after a ``parts``-wide repartition on src when ``parts`` is
+    given); ``nodes`` = (node) to label, default every src of
+    ``sym``. Returns (node, label), label = the minimum node id
+    reachable within ``rounds`` hops, or the component minimum in
+    converged mode (labels are monotone non-increasing, so the
+    fixpoint is the exact component labeling)."""
+    if parts is not None:
+        sym = sym.repartition(parts, "src")
+    sym = cut_lineage(sym)
+    if nodes is None:
+        nodes = sym.select(F.col("src").alias("node")).distinct()
+    labels = fixpoint(
+        name,
+        nodes.select("node", F.col("node").alias("label")),
+        lambda lab: component_round(sym, lab, parts),
+        rounds,
+        max_rounds,
+        labels_unchanged,
+        "labels still shrinking",
     )
-    joined = labels.join(
-        nbr.select(F.col("dst").alias("node"), "nbr_label"), "node", "left"
-    )
-    new_label = F.least(
-        F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-    )
-    if with_prev:
-        return joined.select(
-            "node",
-            new_label.alias("label"),
-            F.col("label").alias("prev_label"),
-        )
-    return joined.select("node", new_label.alias("label"))
+    return labels.select("node", "label")
 
 
 def component_labels(edges: DataFrame, iters: int) -> DataFrame:
     """CONNECTED COMPONENTS of the undirected graph via min-label
-    propagation — the graph family's own CC entry (the dedup stack's
-    connected_canonical is the same algorithm specialized to shallow
-    near-dup clusters; co-purchase components are DEEPER — label must
-    travel the component's min-node eccentricity, measured 4/11/8
-    rounds at sf0.001/0.01/0.1 — so this form takes its round count
-    explicitly and the converged twin below iterates to fixpoint).
-    Each round: one graph-sized join + one min-aggregate (map-side
-    partials) + one left join; labels are referenced twice per round,
-    so lineage cuts per round (the family convention,
-    :func:`cut_lineage`). A fixed ``iters`` is mirrored exactly by the
-    SQL oracle; convergence is the separately pinned claim. Returns
-    (part, component) where component = the component's minimum node
-    id (stable, interpretable)."""
+    propagation (:func:`min_label_components`), fixed-round entry:
+    exactly ``iters`` rounds, mirrored by the SQL oracle. Co-purchase
+    components are deep — a label must travel the component's
+    min-node eccentricity, measured 4/11/8 rounds at sf0.001/0.01/0.1
+    — so production callers use :func:`component_labels_converged`.
+    Returns (part, component), component = the component's minimum
+    node id (stable, interpretable)."""
     if iters < 1:
         raise ValueError(f"component_labels: iters must be >= 1 (got {iters})")
-    sym = cut_lineage(
-        edges.select(
-            F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-        ).unionAll(
-            edges.select(
-                F.col("part_b").alias("src"), F.col("part_a").alias("dst")
-            )
-        )
-    )
-    labels = sym.select("src").distinct().select(
-        F.col("src").alias("node"), F.col("src").alias("label")
-    )
-    for _ in range(iters):
-        labels = cut_lineage(component_round(sym, labels))
-    return labels.select(
-        F.col("node").cast("long").alias("part"),
-        F.col("label").cast("long").alias("component"),
-    )
+    return _components(edges, rounds=iters)
 
 
 def component_labels_converged(
     edges: DataFrame, max_iters: int = 64, parts: int | None = None
 ) -> DataFrame:
-    """Iterate-to-fixpoint form of :func:`component_labels` (the
-    production entry — component depth grows with graph diameter, so
-    a fixed unroll under-labels at 100× exactly like the peel/LPA
-    cases, VERDICT r14 item 3). Labels are MONOTONE non-increasing
-    under min-propagation, so the convergence probe is a changed-count
-    (one graph-sized join + count per round); a fixpoint is the exact
-    component labeling — unlike LPA there is no oscillation mode, but
-    ``max_iters`` still bounds the loop and FAILS LOUD on exhaustion
-    (a too-small bound must not silently ship split components).
+    """Converged entry of :func:`component_labels`: rounds until no
+    label changes. Component depth grows with graph diameter, so a
+    fixed unroll under-labels at 100×; ``max_iters`` fails loud rather
+    than shipping split components.
 
-    ``parts`` (optimization r17, VERDICT r16 item 3): a caller that
-    KNOWS the graph is small — :func:`components_refresh`, whose
-    contracted relation is batch-sized by construction and already
-    materialized, so its row count is in hand — passes the measured
-    partition budget here and every round runs with that many shuffle
-    partitions instead of ``spark.sql.shuffle.partitions``. At 32
-    cores the per-round fixpoint jobs otherwise shred kilobyte
-    relations into 32-task stages (AQE's parallelism-first coalescing
-    keeps one partition per core), which made the refresh probe
-    SLOWER at 32 cores than at 8 (driver r16: 8.09 s vs 1.83 s). The
-    conf is scoped to this loop (every round job executes eagerly
-    inside it via the per-round cuts) and restored on exit; output is
-    identical — only stage width changes."""
-    spark = edges.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    if parts is not None:
-        spark.conf.set(conf_key, str(parts))
-    try:
-        sym = cut_lineage(
-            edges.select(
-                F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-            ).unionAll(
-                edges.select(
-                    F.col("part_b").alias("src"), F.col("part_a").alias("dst")
-                )
-            )
-        )
-        labels = cut_lineage(
-            sym.select("src").distinct().select(
-                F.col("src").alias("node"), F.col("src").alias("label")
-            )
-        )
-        for _ in range(max_iters):
-            # prev_label rides the checkpointed round output (zero extra
-            # joins — component_round's left join already holds it), so
-            # the convergence probe is a count-scan of materialized blocks
-            # instead of a node-keyed join job per round (optimization r16)
-            new = cut_lineage(component_round(sym, labels, with_prev=True))
-            changed = new.filter(
-                F.col("label") != F.col("prev_label")
-            ).count()
-            labels = new.select("node", "label")
-            if changed == 0:
-                return labels.select(
-                    F.col("node").cast("long").alias("part"),
-                    F.col("label").cast("long").alias("component"),
-                )
-    finally:
-        if parts is not None:
-            spark.conf.set(conf_key, old_parts)
-    raise RuntimeError(
-        f"component_labels_converged: labels still shrinking after "
-        f"max_iters={max_iters} — the graph's min-node eccentricity "
-        "exceeds the bound; raise max_iters rather than shipping "
-        "split components"
+    ``parts``: stage width for a caller that knows the graph is small —
+    :func:`components_refresh` passes :func:`batch_width` of its
+    batch-sized contracted graph. Output is identical; only the
+    partition count of the edge relation and of each round's
+    aggregate changes."""
+    return _components(edges, max_rounds=max_iters, parts=parts)
+
+
+def _components(
+    edges: DataFrame,
+    rounds: int | None = None,
+    max_rounds: int = 64,
+    parts: int | None = None,
+) -> DataFrame:
+    labels = min_label_components(
+        symmetrize(edges), rounds=rounds, max_rounds=max_rounds, parts=parts
+    )
+    return labels.select(
+        F.col("node").cast("long").alias("part"),
+        F.col("label").cast("long").alias("component"),
     )
 
 
@@ -1142,10 +1011,10 @@ def components_refresh(
 ) -> DataFrame:
     """Incremental CONNECTED-COMPONENTS maintenance by component
     CONTRACTION — the dedup cc_refresh pattern (queries_r10) applied
-    to the co-purchase graph (VERDICT r15 item 6): a full recompute
-    pays the graph's propagation depth (14 rounds at test SFs) per
-    refresh even when the batch touches almost nothing; this form's
-    cost follows the BATCH, not the graph diameter.
+    to the co-purchase graph: a full recompute pays the graph's
+    propagation depth (14 rounds at test SFs) per refresh even when
+    the batch touches almost nothing; this form's cost follows the
+    BATCH, not the graph diameter.
 
     ``labels`` = a transitively-closed (part, component) labeling of
     the BASE edge set, component = min member id (what
@@ -1171,33 +1040,23 @@ def components_refresh(
        (left join + coalesce: untouched components pass through), new
        nodes take their contracted label.
 
-    Value-parity with the full recompute over base ∪ delta is pinned
-    in tests/test_r16.py (planted bridge + random graphs) and the
-    live form is B65 ``copurchase_components_refresh``."""
+    The batch-sized half (the contraction's distinct and the mini-CC)
+    runs at :func:`batch_width` of the delta, set by explicit
+    repartitions; the corpus-sized joins keep full width. Value-parity
+    with the full recompute over base ∪ delta is pinned in
+    tests/test_r16.py (planted bridge + random graphs) and the live
+    form is B65 ``copurchase_components_refresh``."""
     # the delta relation feeds THREE consumers (the contraction join,
     # the new-node anti-join, and the fresh-label join) — without an
     # eager cut its upstream chain (in the probe: batch pair gen +
     # semi-restricted fold + anti-join) re-executes per consumer,
     # measured ~3× the probe's data cost at sf1; the relation is
-    # batch-sized, so the materialization is cheap by construction
+    # batch-sized, so the materialization is cheap by construction.
+    # The contracted relation is never larger than the delta (each
+    # delta edge contracts to at most one edge), so one width sizes
+    # both.
     new_edges = cut_lineage(new_edges.select("part_a", "part_b"))
-    # partition budget for the batch-sized half (optimization r17,
-    # VERDICT r16 item 3): the delta is already materialized by the
-    # cut, so its count is a cheap block scan — size the contraction
-    # shuffle and the mini-CC fixpoint's partitions to the DATA (one
-    # partition per 64k rows, capped at defaultParallelism) instead of
-    # one per core: at 32 cores the per-round jobs otherwise shred
-    # kilobyte relations into 32-task stages (the driver's r16 probe
-    # ran 8.09 s at 32 cores vs 1.83 s at 8). The contracted relation
-    # is never larger than the delta (each delta edge contracts to at
-    # most one edge), so one count sizes both; a corpus-scale batch
-    # grows the budget back — nothing here caps real data.
-    n_delta = new_edges.count()
-    spark = new_edges.sparkSession
-    mini_parts = max(
-        1,
-        min(spark.sparkContext.defaultParallelism, -(-n_delta // 65536)),
-    )
+    mini_parts = batch_width(new_edges)
     new_edges = new_edges.coalesce(mini_parts)
     lab_a = labels.select(
         F.col("part").alias("part_a"), F.col("component").alias("_ca")
@@ -1214,23 +1073,15 @@ def components_refresh(
             F.coalesce(F.col("_cb"), F.col("part_b")).alias("cb"),
         )
     )
-    # the contraction's distinct-shuffle is batch-sized too — scope the
-    # measured budget over its eager cut (restored immediately; the
-    # corpus-sized upd/fresh joins below run at full width)
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, str(mini_parts))
-    try:
-        contracted = cut_lineage(
-            canon.filter(F.col("ca") != F.col("cb"))
-            .select(
-                F.least("ca", "cb").alias("part_a"),
-                F.greatest("ca", "cb").alias("part_b"),
-            )
-            .distinct()
+    contracted = cut_lineage(
+        canon.filter(F.col("ca") != F.col("cb"))
+        .select(
+            F.least("ca", "cb").alias("part_a"),
+            F.greatest("ca", "cb").alias("part_b"),
         )
-    finally:
-        spark.conf.set(conf_key, old_parts)
+        .repartition(mini_parts, "part_a", "part_b")
+        .distinct()
+    )
     # (canonical -> merged label) for TOUCHED components only
     remap = component_labels_converged(
         contracted, max_iters, parts=mini_parts
@@ -1260,102 +1111,6 @@ def components_refresh(
     return upd.unionByName(fresh)
 
 
-def _star_round(pairs: DataFrame, phase: str) -> DataFrame:
-    """One large-star or small-star transform over an undirected
-    distinct pair set (part_a < part_b). Per center node u with
-    neighborhood N(u) and m = min(N(u) ∪ {u}): large-star rewires
-    every STRICTLY LARGER neighbor to m; small-star rewires every
-    smaller-or-equal neighbor AND u itself to m. Both preserve the
-    component partition (each rewired node stays connected to m
-    through u's old edge set); output re-canonicalized to undirected
-    distinct pairs, self-loops dropped."""
-    sym = pairs.select(
-        F.col("part_a").alias("u"), F.col("part_b").alias("v")
-    ).unionAll(
-        pairs.select(F.col("part_b").alias("u"), F.col("part_a").alias("v"))
-    )
-    mins = sym.groupBy("u").agg(F.min("v").alias("_mn"))
-    j = sym.join(mins, "u").select(
-        "u", "v", F.least(F.col("_mn"), F.col("u")).alias("m")
-    )
-    if phase == "large":
-        out = j.filter(F.col("v") > F.col("u")).select(
-            F.col("v").alias("x"), F.col("m").alias("y")
-        )
-    else:
-        out = (
-            j.filter(F.col("v") < F.col("u"))
-            .select(F.col("v").alias("x"), F.col("m").alias("y"))
-            .unionAll(j.select(F.col("u").alias("x"), F.col("m").alias("y")))
-        )
-    return (
-        out.filter(F.col("x") != F.col("y"))
-        .select(
-            F.least("x", "y").alias("part_a"),
-            F.greatest("x", "y").alias("part_b"),
-        )
-        .distinct()
-    )
-
-
-def component_labels_bigstar(
-    edges: DataFrame, max_iters: int = 50
-) -> DataFrame:
-    """Alternating LARGE-STAR / SMALL-STAR connected components — the
-    O(log n)-round alternative to min-label propagation (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14;
-    VERDICT r15 item 7). Min-label propagation needs DIAMETER-many
-    rounds: a 100× long-chain component (supply chains, citation
-    paths) turns the round count into the bottleneck. The alternating
-    algorithm instead REWIRES the edge set itself — each round halves
-    tree heights, converging to depth-1 stars rooted at each
-    component's MINIMUM node in O(log n) rounds regardless of
-    diameter, at the cost of materializing a same-sized edge relation
-    per round (one groupBy-min + join per phase, two phases per
-    round; lineage cut per phase). Same signature and output as
-    :func:`component_labels` / :func:`component_labels_converged` —
-    (part, component), component = min member id — value-parity
-    pinned on planted path + random graphs in tests/test_r16.py.
-    Convergence = the pair set reaches a fixpoint (stars are stable
-    under both phases); fails loud on ``max_iters`` exhaustion."""
-    pairs = cut_lineage(
-        edges.select(
-            F.least("part_a", "part_b").alias("part_a"),
-            F.greatest("part_a", "part_b").alias("part_b"),
-        )
-        .filter(F.col("part_a") != F.col("part_b"))
-        .distinct()
-    )
-    for _ in range(max_iters):
-        new = cut_lineage(_star_round(_star_round(pairs, "large"), "small"))
-        changed = (
-            new.count() != pairs.count()
-            or new.subtract(pairs).limit(1).count() > 0
-        )
-        pairs = new
-        if not changed:
-            roots = pairs.select(F.col("part_a").alias("part")).distinct()
-            return (
-                pairs.select(
-                    F.col("part_b").alias("part"),
-                    F.col("part_a").alias("component"),
-                )
-                .unionByName(
-                    roots.select("part", F.col("part").alias("component"))
-                )
-                .distinct()
-                .select(
-                    F.col("part").cast("long").alias("part"),
-                    F.col("component").cast("long").alias("component"),
-                )
-            )
-    raise RuntimeError(
-        f"component_labels_bigstar: edge set still rewiring after "
-        f"max_iters={max_iters} rounds — raise max_iters rather than "
-        "shipping a non-star (under-contracted) labeling"
-    )
-
-
 def clustering_coefficients(edges: DataFrame, deg: DataFrame) -> DataFrame:
     """Per-node LOCAL CLUSTERING COEFFICIENT — the per-node density
     measure triangle counting exists to feed: c(v) = 2·T(v) /
@@ -1379,7 +1134,7 @@ def clustering_coefficients(edges: DataFrame, deg: DataFrame) -> DataFrame:
             F.col("pk").cast("long").alias("part"),
             F.col("deg").cast("long").alias("deg"),
             nt.alias("n_triangles"),
-            _r9(
+            r9(
                 F.when(
                     F.col("deg") >= 2,
                     F.lit(2.0) * nt.cast("double") / (d * (d - F.lit(1.0))),
@@ -1419,11 +1174,7 @@ def link_predictions(
     (part, cand, n_common, aa_score, rank ≤ topk)."""
     from pyspark.sql import Window
 
-    sym = edges.select(
-        F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-    ).unionAll(
-        edges.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    )
+    sym = symmetrize(edges)
     centers = deg.filter(
         (F.col("deg") >= 2) & (F.col("deg") <= max_deg)
     ).select(F.col("pk").alias("src"), F.col("deg").alias("deg_src"))
@@ -1433,7 +1184,7 @@ def link_predictions(
     wedges = a1.join(a2, "src").filter(F.col("u") < F.col("w"))
     scores = wedges.groupBy("u", "w").agg(
         F.count(F.lit(1)).cast("long").alias("n_common"),
-        _r9(F.sum(F.lit(1.0) / F.log(F.col("deg_src").cast("double")))).alias(
+        r9(F.sum(F.lit(1.0) / F.log(F.col("deg_src").cast("double")))).alias(
             "aa_score"
         ),
     )
@@ -1442,15 +1193,7 @@ def link_predictions(
         ["u", "w"],
         "left_anti",
     )
-    symp = pred.select(
-        F.col("u").alias("part"), F.col("w").alias("cand"), "n_common",
-        "aa_score",
-    ).unionAll(
-        pred.select(
-            F.col("w").alias("part"), F.col("u").alias("cand"), "n_common",
-            "aa_score",
-        )
-    )
+    symp = symmetrize(pred, "part", "cand", "n_common", "aa_score", a="u", b="w")
     rank_w = Window.partitionBy("part").orderBy(
         F.desc("aa_score"), F.asc("cand")
     )
@@ -1487,17 +1230,7 @@ def topk_similar(edges: DataFrame, sup: DataFrame, topk: int) -> DataFrame:
     (part, neighbor, jaccard, rank ≤ topk)."""
     from pyspark.sql import Window
 
-    sym = edges.select(
-        F.col("part_a").alias("part"),
-        F.col("part_b").alias("neighbor"),
-        "pair_cnt",
-    ).unionAll(
-        edges.select(
-            F.col("part_b").alias("part"),
-            F.col("part_a").alias("neighbor"),
-            "pair_cnt",
-        )
-    )
+    sym = symmetrize(edges, "part", "neighbor", "pair_cnt")
     j = (
         sym.join(
             sup.select(F.col("pk").alias("part"), F.col("sup").alias("sup_a")),
@@ -1512,7 +1245,7 @@ def topk_similar(edges: DataFrame, sup: DataFrame, topk: int) -> DataFrame:
         .select(
             "part",
             "neighbor",
-            _r9(
+            r9(
                 F.col("pair_cnt")
                 / (F.col("sup_a") + F.col("sup_b") - F.col("pair_cnt"))
             ).alias("jaccard"),

@@ -46,9 +46,10 @@ from pyspark.sql import functions as F
 from ..functions.text import tokens
 from ..sinks import ensure_table_absent, write_bucketed
 
-#: BM25 hyperparameters — imported from the live query's module so the
-#: standing index can never drift from the batch scorer.
-from ..queries_r8 import BM25_B, BM25_K1
+#: BM25 hyperparameters, shared with the live batch scorer
+#: (queries_r8.bm25_scored) so the standing index can never drift from it.
+BM25_K1 = 1.2
+BM25_B = 0.75
 
 
 def _postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:

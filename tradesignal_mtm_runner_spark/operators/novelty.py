@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.rounding import r9
 from ..sinks import ensure_table_absent, write_bucketed
 
 #: sentinel "never seen" — larger than any doc_id; least() against it
@@ -87,8 +88,6 @@ def novelty_against(
     relation + one per-doc aggregate; zero-gram docs keep (0, 0, 0.0)
     via the LEFT join from the batch. Output matches C72:
     (doc_id, n_distinct, n_novel, novelty)."""
-    from ..queries_r8 import _r9
-
     dg = batch_gram_relation(batch_docs, n)
     batch_first = dg.groupBy("ngram").agg(
         F.min("doc_id").alias("batch_first")
@@ -116,7 +115,7 @@ def novelty_against(
             "doc_id",
             nd.alias("n_distinct"),
             nn.alias("n_novel"),
-            _r9(
+            r9(
                 F.when(nd > 0, nn.cast("double") / nd.cast("double")).otherwise(
                     F.lit(0.0)
                 )

@@ -23,7 +23,6 @@ from .models import PROFIT_SLIPPAGE
 from .mtm_shared import (  # shared with queries_risk.py — see mtm_shared.py
     FEE,
     TAX,
-    ROUND,
     _ORDER,
     _SIGNALS_SQL,
     _TIMELINE_SQL,
@@ -32,8 +31,8 @@ from .mtm_shared import (  # shared with queries_risk.py — see mtm_shared.py
     _cfg,
     _signals,
     _timeline,
-    r9,
 )
+from .functions.rounding import ROUND, r9
 from .operators.mtm import extract_trades, mtm_summary
 
 

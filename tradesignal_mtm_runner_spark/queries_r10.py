@@ -295,13 +295,13 @@ def embedding_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     accounting."""
     import math
 
+    from .functions.rounding import r9
     from .queries_pipeline import _emb
     from .queries_r8 import (
         PCA_ITERS,
         R as R8,
         _gram_matrix,
         _power_iterate_gram,
-        _r9,
     )
 
     emb = persist_tracked(
@@ -314,7 +314,7 @@ def embedding_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     mu_rows = (
         emb.select(F.posexplode("e").alias("pos", "x"))
         .groupBy("pos")
-        .agg(_r9(F.avg("x")).alias("m"))
+        .agg(r9(F.avg("x")).alias("m"))
         .collect()
     )
     dim = len(mu_rows)
@@ -375,9 +375,9 @@ def embedding_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return mat.select(
         F.col("vec_id").cast("long").alias("vec_id"),
-        _r9(_proj("c", v1_lit)).alias("pc1_proj"),
-        _r9(_proj("d", v2_lit)).alias("pc2_proj"),
-        _r9(cnorm).alias("centered_norm"),
+        r9(_proj("c", v1_lit)).alias("pc1_proj"),
+        r9(_proj("d", v2_lit)).alias("pc2_proj"),
+        r9(cnorm).alias("centered_norm"),
     )
 
 
@@ -574,28 +574,18 @@ def cc_refresh_frame(d: DataFrame) -> DataFrame:
     # because its chain starts from a bare scan. cut_lineage =
     # localCheckpoint by default; at cluster scale the reliable-
     # checkpoint conf applies here too (operators/graph.cut_lineage).
-    from .operators.graph import cut_lineage
+    from .operators.graph import batch_width, cut_lineage
 
     nodes = cut_lineage(
         new_sig.select("doc_id").unionByName(touched).distinct()
     )
     edges = cut_lineage(to_canon.unionByName(in_batch))
-    # batch-sized stage width for the mini-CC (optimization r17, the
-    # components_refresh convention): the edge relation is already
-    # materialized by the cut, so its count is a block scan — size
-    # the hop loop's shuffle partitions to the data (one per 64k
-    # rows) instead of one per core; a corpus-scale batch grows the
-    # budget back to full width.
-    n_mini = edges.count()
-    mini_parts = max(
-        1,
-        min(
-            edges.sparkSession.sparkContext.defaultParallelism,
-            -(-n_mini // 65536),
-        ),
-    )
+    # batch-sized stage width for the mini-CC (the components_refresh
+    # convention): the edge relation is already materialized by the
+    # cut, so batch_width's count is a block scan; a corpus-scale
+    # batch grows the width back to full.
     mini = connected_canonical(
-        nodes, edges, iters=REFRESH_CC_ITERS, parts=mini_parts
+        nodes, edges, iters=REFRESH_CC_ITERS, parts=batch_width(edges)
     ).select("doc_id", F.col("canonical_id").alias("new_component"))
 
     # delta: new docs carry their mini-label; base docs in touched

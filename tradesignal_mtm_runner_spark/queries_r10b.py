@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .cache_registry import persist_tracked
-from .queries_r8 import _r9
+from .functions.rounding import r9
 from .sources import load_table
 
 #: minimum co-occurrence count for a basket pair to be reported /
@@ -117,8 +117,8 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pair_cnt",
             "sup_a",
             "sup_b",
-            _r9(F.col("pair_cnt") / F.col("n_orders")).alias("support"),
-            _r9(
+            r9(F.col("pair_cnt") / F.col("n_orders")).alias("support"),
+            r9(
                 F.col("pair_cnt") * F.col("n_orders")
                 / (F.col("sup_a") * F.col("sup_b"))
             ).alias("lift"),
@@ -236,7 +236,7 @@ def user_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "prev_type",
         "next_type",
         "cnt",
-        _r9(F.col("cnt") / F.sum("cnt").over(Window.partitionBy("prev_type"))).alias("p"),
+        r9(F.col("cnt") / F.sum("cnt").over(Window.partitionBy("prev_type"))).alias("p"),
     )
 
 
@@ -292,9 +292,9 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "day",
             "cnt",
-            _r9(F.col("med")).alias("med"),
-            _r9(F.col("mad")).alias("mad"),
-            _r9(
+            r9(F.col("med")).alias("med"),
+            r9(F.col("mad")).alias("mad"),
+            r9(
                 F.col("adev") / F.greatest(F.col("mad"), F.lit(ANOM_MAD_FLOOR))
             ).alias("score"),
         )
@@ -415,7 +415,7 @@ def dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rule",
             "violations",
             "checked",
-            _r9(F.col("violations") / F.col("checked")).alias("fail_rate"),
+            r9(F.col("violations") / F.col("checked")).alias("fail_rate"),
         )
     )
 

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_r8 import _r9
+from .functions.rounding import r9
 from .sources import load_table
 
 #: q2 part slice and region (canonical: p_size = N AND p_type LIKE '%X'
@@ -131,12 +131,12 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(part, F.col("l_partkey") == F.col("p_partkey"))
         .select(
-            _r9(F.col("s_acctbal")).alias("s_acctbal"),
+            r9(F.col("s_acctbal")).alias("s_acctbal"),
             "s_name",
             "n_name",
             F.col("p_partkey").cast("long").alias("p_partkey"),
             "p_name",
-            _r9(F.col("cost")).alias("supply_cost"),
+            r9(F.col("cost")).alias("supply_cost"),
         )
     )
 
@@ -206,10 +206,10 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # total` can flip a part sitting within ULPs of the threshold
     return (
         per_part.join(F.broadcast(total))
-        .filter(_r9(F.col("value")) > _r9(Q11_FRAC * F.col("total")))
+        .filter(r9(F.col("value")) > r9(Q11_FRAC * F.col("total")))
         .select(
             F.col("l_partkey").cast("long").alias("l_partkey"),
-            _r9(F.col("value")).alias("value"),
+            r9(F.col("value")).alias("value"),
         )
     )
 
@@ -372,7 +372,7 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("s_suppkey").cast("long").alias("s_suppkey"),
             "s_name",
-            _r9(F.col("s_acctbal")).alias("s_acctbal"),
+            r9(F.col("s_acctbal")).alias("s_acctbal"),
         )
     )
 
@@ -498,7 +498,7 @@ def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "n_chars"
     )
     u = (_perm(F.col("doc_id")) + 1).cast("double") / F.lit(float(PERM_P + 1))
-    score = _r9(F.log(u) / F.col("n_chars"))
+    score = r9(F.log(u) / F.col("n_chars"))
     ranked = d.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "source",
@@ -604,7 +604,7 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.datediff(F.max("gmax"), F.max("ts")).alias("recency_days"),
             F.count(F.lit(1)).alias("frequency"),
-            _r9(
+            r9(
                 F.coalesce(
                     F.sum(
                         F.when(
@@ -628,7 +628,7 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     th = per_user.agg(
         *[
-            _r9(F.percentile(_th_input(m), F.lit(q))).alias(
+            r9(F.percentile(_th_input(m), F.lit(q))).alias(
                 f"{m}_q{int(q * 100)}"
             )
             for m in ("recency_days", "frequency", "monetary")
@@ -745,9 +745,9 @@ def events_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dow",
         "hour",
         "n_events",
-        _r9(share).alias("share"),
-        _r9(share * F.lit(168.0)).alias("seasonality_index"),
-        _r9(
+        r9(share).alias("share"),
+        r9(share * F.lit(168.0)).alias("seasonality_index"),
+        r9(
             F.when(std > 0, (F.col("n_events") - mean) / std).otherwise(0.0)
         ).alias("z"),
     )

@@ -29,7 +29,8 @@ from .queries_pipeline_extras import (
     _upsert_read_manifest,
     make_bucketed_wal_sink,
 )
-from .queries_r8 import SCD2_HISTORY_SQL, _r9
+from .functions.rounding import r9
+from .queries_r8 import SCD2_HISTORY_SQL
 from .sources import load_table, stream_table
 from .streaming import await_or_raise
 
@@ -133,7 +134,7 @@ def scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("long").alias("user_id"),
         "valid_from",
         "valid_to",
-        _r9(F.col("value")).alias("value"),
+        r9(F.col("value")).alias("value"),
         F.col("valid_to").isNull().alias("is_current"),
     )
 

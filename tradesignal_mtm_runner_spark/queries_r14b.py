@@ -252,7 +252,7 @@ def copurchase_graph_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, pairs = _basket_pair_counts(spark, sf_dir)
     edges = persist_tracked(pairs.select("part_a", "part_b", "pair_cnt"))
     from .operators.graph import triangle_counts
-    from .queries_r8 import _r9
+    from .functions.rounding import r9
 
     deg = node_degrees(edges)
     dstats = deg.agg(
@@ -278,7 +278,7 @@ def copurchase_graph_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         # relation n_nodes=0 / sum_deg NULL, and Spark's NULL-division
         # vs DuckDB's divide-by-zero behavior would split the engines
         # on the one edge case the otherwise-total parity misses
-        _r9(
+        r9(
             F.when(
                 F.col("n_nodes") > 0,
                 F.col("_sum_deg").cast("double") / F.col("n_nodes"),
@@ -286,7 +286,7 @@ def copurchase_graph_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("avg_degree"),
         "n_wedges",
         "n_triangles",
-        _r9(
+        r9(
             F.when(
                 F.col("n_wedges") > 0,
                 F.lit(3.0)
@@ -362,7 +362,7 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         SHINGLE_K,
         _docs,
     )
-    from .queries_r8 import _r9
+    from .functions.rounding import r9
 
     docs = _docs(spark, sf_dir)
     # ONE tokenize+shingle corpus pass shared by the signature build
@@ -415,9 +415,9 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return est.join(exact, ["id_a", "id_b"]).select(
         F.col("id_a").cast("long").alias("id_a"),
         F.col("id_b").cast("long").alias("id_b"),
-        _r9(F.col("_est")).alias("est_jaccard"),
-        _r9(F.col("jaccard")).alias("exact_jaccard"),
-        _r9(F.abs(F.col("_est") - F.col("jaccard"))).alias("abs_err"),
+        r9(F.col("_est")).alias("est_jaccard"),
+        r9(F.col("jaccard")).alias("exact_jaccard"),
+        r9(F.abs(F.col("_est") - F.col("jaccard"))).alias("abs_err"),
     )
 
 
@@ -486,7 +486,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.0 when the lang is never predicted, recall 0.0 when it never
     occurs as truth, F1 0.0 when P + R = 0."""
     from .queries_pipeline import lang_id
-    from .queries_r8 import _r9
+    from .functions.rounding import r9
 
     li = persist_tracked(
         lang_id(spark, sf_dir).select("lang", "lang_pred")
@@ -525,9 +525,9 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_true",
         "n_pred",
         "n_correct",
-        _r9(p).alias("precision"),
-        _r9(r).alias("recall"),
-        _r9(
+        r9(p).alias("precision"),
+        r9(r).alias("recall"),
+        r9(
             F.when(p + r > 0, F.lit(2.0) * p * r / (p + r)).otherwise(
                 F.lit(0.0)
             )
@@ -591,7 +591,7 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped_frac guarded for zero-word clusters."""
     from .functions import text as TX
     from .queries_pipeline import _docs, dedup_connected
-    from .queries_r8 import _r9
+    from .functions.rounding import r9
 
     cc = dedup_connected(spark, sf_dir)
     toks = _docs(spark, sf_dir).select(
@@ -623,7 +623,7 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("total_words") - F.col("kept_words"))
         .cast("long")
         .alias("dropped_words"),
-        _r9(
+        r9(
             F.when(
                 F.col("total_words") > 0,
                 (F.col("total_words") - F.col("kept_words"))

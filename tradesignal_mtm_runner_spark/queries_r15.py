@@ -140,7 +140,7 @@ def copurchase_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     node_share) ordered implicitly by the driver's sorted compare."""
     from pyspark.sql import Window
 
-    from .queries_r8 import _r9
+    from .functions.rounding import r9
 
     _, pairs = _basket_pair_counts(spark, sf_dir)
     deg = node_degrees(pairs)
@@ -159,7 +159,7 @@ def copurchase_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "min_deg",
         "max_deg",
         "n_nodes",
-        _r9(F.col("n_nodes").cast("double") / total).alias("node_share"),
+        r9(F.col("n_nodes").cast("double") / total).alias("node_share"),
     )
 
 
@@ -273,7 +273,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (doc_id, n_distinct, n_novel, novelty)."""
     from .functions import text as TX
     from .queries_pipeline import _docs
-    from .queries_r8 import _r9
+    from .functions.rounding import r9
 
     d = _docs(spark, sf_dir)
     toks = TX.tokens(F.col("text"))
@@ -309,7 +309,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").cast("long").alias("doc_id"),
             nd.alias("n_distinct"),
             nn.alias("n_novel"),
-            _r9(
+            r9(
                 F.when(
                     nd > 0, nn.cast("double") / nd.cast("double")
                 ).otherwise(F.lit(0.0))

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from .cache_registry import persist_tracked
 from .queries_r10b import _BASKET_CTES, BASKET_MIN_SUP
 from .queries_r15 import COMP_ITERS, NOVELTY_N, _components_sql
-from .queries_r8 import _r9
+from .functions.rounding import r9
 
 #: every (l_orderkey % REFRESH_MOD == 0)-keyed order is the "new
 #: batch" for the refresh split — whole ORDERS, never split orders
@@ -153,7 +153,7 @@ def novelty_saturation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_docs"),
             nfs.alias("n_first_seen"),
             cum.cast("long").alias("cum_first_seen"),
-            _r9(
+            r9(
                 F.when(tot > 0, cum.cast("double") / tot.cast("double"))
                 .otherwise(F.lit(0.0))
             ).alias("cum_share"),
@@ -247,8 +247,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_inter",
             "n_a",
             "n_b",
-            _r9(F.col("_ca")).alias("containment_a"),
-            _r9(F.col("_cb")).alias("containment_b"),
+            r9(F.col("_ca")).alias("containment_a"),
+            r9(F.col("_cb")).alias("containment_b"),
             F.when(F.col("_ca") > F.col("_cb"), F.col("id_a"))
             .when(F.col("_cb") > F.col("_ca"), F.col("id_b"))
             .otherwise(F.least("id_a", "id_b"))
@@ -313,10 +313,10 @@ def corpus_mix_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         "lang",
         "n_docs",
-        _r9(bshare).alias("bucket_share"),
-        _r9(cshare).alias("corpus_share"),
-        _r9(delta).alias("share_delta"),
-        _r9(
+        r9(bshare).alias("bucket_share"),
+        r9(cshare).alias("corpus_share"),
+        r9(delta).alias("share_delta"),
+        r9(
             F.lit(0.5) * F.sum(delta).over(wb)
         ).alias("tv_dist"),
     )

@@ -42,7 +42,7 @@ from .queries_pipeline import (
     R,
     _emb,
 )
-from .queries_r8 import _r9
+from .functions.rounding import r9
 from .queries_r10b import _BASKET_CTES, _basket_pair_counts
 from .sources import load_table
 
@@ -181,7 +181,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         F.lit(ANN_TOPK).cast("long").alias("n_exact"),
         n_hits.alias("n_hits"),
-        _r9(n_hits.cast("double") / F.lit(ANN_TOPK)).alias("recall"),
+        r9(n_hits.cast("double") / F.lit(ANN_TOPK)).alias("recall"),
     )
 
 
@@ -310,7 +310,7 @@ def _changepoint_from_daily(daily: DataFrame) -> DataFrame:
         .filter((F.col("n_left") == CP_W) & (F.col("n_right") == CP_W))
         .join(F.broadcast(mad), "event_type")
     )
-    score = _r9(
+    score = r9(
         F.abs(F.col("right_mean") - F.col("left_mean"))
         / F.greatest(F.col("mad"), F.lit(CP_MAD_FLOOR))
     )
@@ -318,8 +318,8 @@ def _changepoint_from_daily(daily: DataFrame) -> DataFrame:
         "event_type",
         "day",
         "cnt",
-        _r9(F.col("left_mean")).alias("left_mean"),
-        _r9(F.col("right_mean")).alias("right_mean"),
+        r9(F.col("left_mean")).alias("left_mean"),
+        r9(F.col("right_mean")).alias("right_mean"),
         score.alias("score"),
         (score > CP_THRESH).alias("is_changepoint"),
     )
@@ -568,7 +568,7 @@ def copurchase_eff_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hit.select(
         F.col("hop").cast("long").alias("t90"),
         F.col("_max").cast("long").alias("total_reach_pairs"),
-        _r9(eff).alias("eff_diameter"),
+        r9(eff).alias("eff_diameter"),
     )
 
 
@@ -656,8 +656,8 @@ def copurchase_eff_diameter_hb(
     )
     return hit.select(
         F.col("hop").cast("long").alias("t90"),
-        _r9(F.col("_max")).alias("est_total_reach"),
-        _r9(eff).alias("eff_diameter"),
+        r9(F.col("_max")).alias("est_total_reach"),
+        r9(eff).alias("eff_diameter"),
     )
 
 

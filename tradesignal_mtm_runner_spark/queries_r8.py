@@ -22,15 +22,11 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.rounding import ROUND as R
+from .functions.rounding import r9
+from .operators.lexical import BM25_B, BM25_K1
 from .queries_pipeline import _docs, _emb
 from .sources import load_table
-
-R = 9
-
-
-def _r9(c) -> F.Column:
-    # + 0.0 canonicalizes IEEE -0.0 after rounding (see mtm_shared.r9)
-    return F.round(c, R) + F.lit(0.0)
 
 
 # --- B40 SCD2 history build ---------------------------------------------------
@@ -53,7 +49,7 @@ def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("long").alias("user_id"),
         F.col("ts").alias("valid_from"),
         F.lead("ts").over(w).alias("valid_to"),
-        _r9(F.col("value")).alias("value"),
+        r9(F.col("value")).alias("value"),
         F.lead("ts").over(w).isNull().alias("is_current"),
     )
 
@@ -107,9 +103,9 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col(f"{c}__rows").alias("n_rows"),
                         F.col(f"{c}__nulls").alias("n_nulls"),
                         F.col(f"{c}__ndv").alias("n_distinct"),
-                        _r9(F.col(f"{c}__min")).alias("min_value"),
-                        _r9(F.col(f"{c}__max")).alias("max_value"),
-                        _r9(F.col(f"{c}__avg")).alias("avg_value"),
+                        r9(F.col(f"{c}__min")).alias("min_value"),
+                        r9(F.col(f"{c}__max")).alias("max_value"),
+                        r9(F.col(f"{c}__avg")).alias("avg_value"),
                     )
                     for c in _PROFILE_COLS
                 ]
@@ -147,7 +143,7 @@ def _collect_vec(df: DataFrame, pos_col: str, val_col: str, dim: int) -> list:
 
 
 def _r9_scalar(x: float) -> float:
-    """Driver-side mirror of the _r9 column helper: Spark's round()
+    """Python-side mirror of the r9 column helper: Spark's round()
     is BigDecimal.valueOf(x).setScale(9, HALF_UP), and
     BigDecimal.valueOf goes through the double's SHORTEST decimal
     repr — which is exactly Python's repr — so decimal HALF_UP over
@@ -244,7 +240,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     mu_rows = (
         emb.select(F.posexplode("e").alias("pos", "x"))
         .groupBy("pos")
-        .agg(_r9(F.avg("x")).alias("m"))
+        .agg(r9(F.avg("x")).alias("m"))
         .collect()
     )
     dim = len(mu_rows)
@@ -280,8 +276,8 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return emb.select(
         F.col("vec_id").cast("long").alias("vec_id"),
-        _r9(proj).alias("pc1_proj"),
-        _r9(cnorm).alias("centered_norm"),
+        r9(proj).alias("pc1_proj"),
+        r9(cnorm).alias("centered_norm"),
     )
 
 
@@ -351,8 +347,6 @@ EMBEDDING_PCA_SQL = _pca_sql()
 
 # --- C52 BM25 retrieval scoring -----------------------------------------------
 
-BM25_K1 = 1.2
-BM25_B = 0.75
 BM25_TOPK = 5
 #: fixed query set over the synthetic vocabulary — deterministic, and
 #: multi-term so the per-term partial scores genuinely accumulate
@@ -402,7 +396,7 @@ def bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(stats))
         .groupBy("query_id", "doc_id")
         .agg(
-            _r9(
+            r9(
                 F.sum(idf * F.col("tf") * (BM25_K1 + 1) / denom)
             ).alias("score")
         )
@@ -533,7 +527,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, ["query_id", "corpus_id"], "full_outer")
         .withColumn(
             "rrf",
-            _r9(
+            r9(
                 F.coalesce(1.0 / (RRF_K + F.col("rank_a")), F.lit(0.0))
                 + F.coalesce(1.0 / (RRF_K + F.col("rank_b")), F.lit(0.0))
             ),
@@ -609,7 +603,7 @@ def boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("n_segments").cast("long").alias("n_segments"),
         F.col("n_boiler").cast("long").alias("n_boiler"),
-        _r9(ratio).alias("boiler_ratio"),
+        r9(ratio).alias("boiler_ratio"),
         (ratio <= BOILER_MAX_RATIO).alias("keep"),
     )
 

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .cache_registry import persist_tracked
+from .functions.rounding import r9
 from .queries_pipeline import _V_SQL, _emb
 from .queries_r8 import (
     BM25_QUERIES,
@@ -25,7 +26,6 @@ from .queries_r8 import (
     RRF_POOL,
     RRF_TOPK,
     _PROFILE_COLS,
-    _r9,
     bm25_scored,
 )
 from .sources import load_table
@@ -116,7 +116,7 @@ def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window(F.col("ts"), TREND_WINDOW).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            _r9(F.sum("value")).alias("total_value"),
+            r9(F.sum("value")).alias("total_value"),
         )
         .select(
             (F.unix_millis(F.col("w.start")) / 1000)
@@ -311,9 +311,9 @@ def approx_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col(f"{c}__rows").alias("n_rows"),
                         F.col(f"{c}__nulls").alias("n_nulls"),
                         F.col(f"{c}__ndv").alias("n_distinct_approx"),
-                        _r9(F.col(f"{c}__min")).alias("min_value"),
-                        _r9(F.col(f"{c}__max")).alias("max_value"),
-                        _r9(F.col(f"{c}__avg")).alias("avg_value"),
+                        r9(F.col(f"{c}__min")).alias("min_value"),
+                        r9(F.col(f"{c}__max")).alias("max_value"),
+                        r9(F.col(f"{c}__avg")).alias("avg_value"),
                     )
                     for c in _PROFILE_COLS
                 ]
@@ -385,7 +385,7 @@ def hybrid_bm25_pq_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fused = lex.join(vec, ["query_id", "doc_id"], "full_outer").withColumn(
         "rrf",
-        _r9(
+        r9(
             F.coalesce(1.0 / (RRF_K + F.col("rank_lex")), F.lit(0.0))
             + F.coalesce(1.0 / (RRF_K + F.col("rank_vec")), F.lit(0.0))
         ),
@@ -539,7 +539,7 @@ def doc_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = per_char.groupBy("doc_id").agg(
         n.cast("long").alias("n_chars"),
         F.count(F.lit(1)).cast("long").alias("n_unique_chars"),
-        _r9(ent).alias("entropy_bits"),
+        r9(ent).alias("entropy_bits"),
     )
     return per_doc.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -626,9 +626,9 @@ def token_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
     )
     return s.select(
-        _r9(slope).alias("zipf_slope"),
-        _r9(intercept).alias("zipf_intercept"),
-        _r9(r2).alias("r_squared"),
+        r9(slope).alias("zipf_slope"),
+        r9(intercept).alias("zipf_intercept"),
+        r9(r2).alias("r_squared"),
         F.col("n").cast("long").alias("n_terms"),
     )
 

@@ -38,15 +38,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .models import MIN_NUMERIC_VALUE, PROFIT_SLIPPAGE
+from .functions.rounding import ROUND, r9
 from .mtm_shared import (
-    ROUND,
     _ORDER,
     _SIGNALS_SQL,
     _TIMELINE_SQL,
     _W,
     _WCUM,
     _timeline,
-    r9,
 )
 
 ANNUAL_HOURS = 365.0 * 24.0

@@ -40,3 +40,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def pin_reader_confs(spark: SparkSession) -> None:
+    """The session settings the loaders (sources.load_table /
+    stream_table) need on ANY session, including one the caller built
+    itself: legacy TIMESTAMP(NANOS) parquet columns surface as bigint
+    (the loaders convert them), and the session tz is UTC so the
+    NTZ->LTZ cast is host-independent and DuckDB-identical. Idempotent.
+    This module is the only one that writes session conf."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")

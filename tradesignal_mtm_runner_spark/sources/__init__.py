@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin_reader_confs
+
 TPCH_TABLES = [
     "region",
     "nation",
@@ -59,15 +61,8 @@ def _normalize_ts(df: DataFrame, name: str) -> DataFrame:
     return df
 
 
-def _pin_utc(spark: SparkSession) -> None:
-    # Make the NTZ->LTZ cast host-independent (and DuckDB-identical)
-    # even when the caller built its own SparkSession.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _pin_utc(spark)
+    pin_reader_confs(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     return _normalize_ts(df, name)
 
@@ -113,8 +108,7 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     watermark never silently merges into an already-evicted
     aggregate — replay==batch is only guaranteed for single-batch or
     time-ordered sources."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _pin_utc(spark)
+    pin_reader_confs(spark)
     raw_schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
     # the file stream source only takes a directory -> scope it to the
     # one table file with pathGlobFilter
