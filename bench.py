@@ -277,27 +277,45 @@ HEADLINERS = [
 #: r9 isolated probe: 27.8 s then 18.6 s — so a single sample is
 #: noise, while the third run buys little for its cost)
 SWEEP_BEST2 = {"mtm_sweep_scale", "mtm_sweep_stream"}
-SWEEP_CONFIGS = 32  # grid size of mtm_sweep_scale, for configs/sec
+
+
+#: core count of the headline runs; a run at any other count writes and
+#: reads its own ``_c{cpus}`` detail slots
+DEFAULT_CPUS = 32
+
+
+def _detail_slot(rnd: int, cpus: int, sf_tag: str = "") -> str:
+    """Repo-relative detail file of round ``rnd`` at ``cpus`` cores:
+    ``docs/BENCH_local_r{N}{sf_tag}.json`` at DEFAULT_CPUS, else
+    ``docs/BENCH_local_r{N}{sf_tag}_c{cpus}.json``, so a low-core run
+    never lands in (or is read from) the headline slot."""
+    c_tag = "" if cpus == DEFAULT_CPUS else f"_c{cpus}"
+    return f"docs/BENCH_local_r{rnd:02d}{sf_tag}{c_tag}.json"
 
 
 def _vs_prev_detail(
     rnd: int, cpus: int, timings: dict, repo: str = _REPO
 ) -> dict | None:
     """Round-over-round summary against the newest of the previous 3
-    rounds' detail files (``docs/BENCH_local_r{N}.json``) measured at
-    the SAME core count: geomean of per-key speedups over the common
-    keys (the Spark-free bookkeeper anchor excluded — it measures the
-    host) plus >10% regression/improvement counts. A detail slot can
-    hold a run at a different core count (a low-core scaling run
-    infers round N+1 and writes there), and comparing across core
-    counts would mislead, so such files are skipped — and so is a file
-    that does not record ``cpus`` at all, whose core count is unknown.
-    Missing or unreadable files are skipped too. Returns None when no
+    rounds' detail files measured at the SAME core count: geomean of
+    per-key speedups over the common keys (the Spark-free bookkeeper
+    anchor excluded — it measures the host) plus >10% regression/
+    improvement counts. Each round's ``_detail_slot`` for ``cpus`` is
+    read first, then its headline slot (older rounds wrote every core
+    count there). A file qualifies only if it records the same
+    ``cpus``: one without ``cpus`` has an unknown core count and is
+    skipped, as are missing or unreadable files. Returns None when no
     file qualifies or the first qualifying one shares no key."""
     import math
 
-    for back in (1, 2, 3):
-        prev_rel = f"docs/BENCH_local_r{rnd - back:02d}.json"
+    slots = [
+        (rnd - back, rel)
+        for back in (1, 2, 3)
+        for rel in dict.fromkeys(
+            (_detail_slot(rnd - back, cpus), _detail_slot(rnd - back, DEFAULT_CPUS))
+        )
+    ]
+    for prev_rnd, prev_rel in slots:
         try:
             with open(os.path.join(repo, prev_rel)) as fh:
                 prev = json.load(fh)
@@ -316,11 +334,11 @@ def _vs_prev_detail(
                 elif v < pv * 0.90:
                     n_imp += 1
         except Exception:  # noqa: BLE001 - a missing/odd artifact
-            continue  # is skippable; try one round further back
+            continue  # is skippable; try the next slot
         if not logs:
             return None
         return {
-            "prev_round": rnd - back,
+            "prev_round": prev_rnd,
             "n_common": len(logs),
             "geomean_speedup": round(math.exp(sum(logs) / len(logs)), 3),
             "n_regressed_gt10pct": n_reg,
@@ -331,11 +349,15 @@ def _vs_prev_detail(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(DEFAULT_CPUS))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from tradesignal_mtm_runner_spark.session import get_spark
-    from tradesignal_mtm_runner_spark.queries import EXTRA_QUERIES, QUERIES
+    from tradesignal_mtm_runner_spark.queries import (
+        EXTRA_QUERIES,
+        QUERIES,
+        SWEEP_SCALE_CONFIGS,
+    )
 
     # same 20 headliners as round 1 (mtm_param_sweep moved to the
     # pytest-only extras registry but stays benched for r-over-r deltas)
@@ -851,7 +873,7 @@ def main() -> None:
     }
     if "mtm_sweep_scale" in timings:
         out["sweep_configs_per_sec"] = round(
-            SWEEP_CONFIGS / timings["mtm_sweep_scale"], 2
+            len(SWEEP_SCALE_CONFIGS) / timings["mtm_sweep_scale"], 2
         )
     # measurement-definition changes, so cross-round readers compare
     # like to like (VERDICT r16 item 2)
@@ -863,17 +885,16 @@ def main() -> None:
             "r15->r16 deltas on this key are not comparable"
         )
     }
-    # blocked-vs-explode regression reference (VERDICT r5 item 5): the
-    # per-config explode twin of the same 32-config grid, timed once;
-    # reported as separate fields so the headline total still measures
-    # only the shipped (blocked) sweep.
+    # per-config reference for the blocked sweep: the same grid at
+    # block_size=1 (bars replicated once per config through the
+    # shuffle), timed once; reported as separate fields so the headline
+    # total still measures only the shipped k=8 sweep.
     # Full memory cleanup first: three bench rounds leave one memory-
     # sink TEMP VIEW per streaming query per round (each round mints a
     # fresh sink name), and those tables live in the unified memory
     # pool outside cache_registry's tracking — at sf1 the accumulation
-    # tipped the explode twin's bars x 32 shuffle into
-    # UNABLE_TO_ACQUIRE_MEMORY (r9). Everything timed is done; drop it
-    # all.
+    # tipped the bars x 32 shuffle into UNABLE_TO_ACQUIRE_MEMORY.
+    # Everything timed is done; drop it all.
     try:
         for t in spark.catalog.listTables():
             if t.isTemporary:
@@ -882,17 +903,24 @@ def main() -> None:
         pass
     spark.catalog.clearCache()
     try:
-        from tradesignal_mtm_runner_spark.queries import (
-            q_mtm_sweep_scale_explode,
+        from tradesignal_mtm_runner_spark.mtm_shared import _signals
+        from tradesignal_mtm_runner_spark.operators.bookkeeper import (
+            run_mtm_param_sweep_blocked,
+            summarize_timeline,
         )
 
         t0 = time.time()
-        q_mtm_sweep_scale_explode(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        summarize_timeline(
+            run_mtm_param_sweep_blocked(
+                _signals(spark, sf_dir), SWEEP_SCALE_CONFIGS, block_size=1
+            ),
+            group_cols=["symbol", "config_id"],
+        ).write.format("noop").mode("overwrite").save()
         dt = round(time.time() - t0, 3)
         out["sweep_explode_secs"] = dt
-        out["sweep_explode_configs_per_sec"] = round(SWEEP_CONFIGS / dt, 2)
+        out["sweep_explode_configs_per_sec"] = round(
+            len(SWEEP_SCALE_CONFIGS) / dt, 2
+        )
     except Exception as exc:  # noqa: BLE001
         errors["mtm_sweep_scale_explode"] = f"{type(exc).__name__}: {exc}"[:500]
     if errors:
@@ -926,7 +954,7 @@ def main() -> None:
     if vs_prev is not None:
         out["vs_prev_detail"] = vs_prev
     sf_tag = "" if out["sf"] == 0.1 else f"_sf{sf}"
-    detail_rel = f"docs/BENCH_local_r{rnd:02d}{sf_tag}.json"
+    detail_rel = _detail_slot(rnd, int(cpus), sf_tag)
     try:
         with open(os.path.join(_REPO, detail_rel), "w") as fh:
             json.dump(out, fh, indent=1, sort_keys=True)

@@ -1,8 +1,12 @@
-"""Capture .explain("formatted") snapshots for the optimization-round
-deliverable (plans/r16/<query>_{before,after}.txt).
+"""Capture .explain("formatted") snapshots of registered queries, one
+file per query: OUT_DIR/<query>_<tag>.txt.
 
-Run: python scripts/capture_plans_r16.py before|after [query ...]
-Defaults to the full touched-query list when no names are given.
+Run: python scripts/capture_plans.py OUT_DIR before|after QUERY [QUERY ...]
+
+Queries come from the merged registry (QUERIES + EXTRA_QUERIES) and run
+at $SPARK_GRAFT_SF_DIR (the same sf0.1 default as bench.py) on local[8].
+Capture "before" at the parent commit and "after" at the change, into
+a directory of your choosing, and diff the pairs.
 """
 
 from __future__ import annotations
@@ -12,34 +16,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: queries whose plans this optimization round touches (kept in sync
-#: with OPTIMIZATION_r16.md "Changes")
-DEFAULT = [
-    "dedup_cc_probe",
-    "dedup_cc_refresh",
-    "dedup_keep_best",
-    "dedup_connected",
-    "dedup_cluster_stats",
-    "simhash_pairs",
-    "copurchase_components",
-    "copurchase_components_refresh",
-    "copurchase_communities",
-    "copurchase_pagerank",
-    "copurchase_kcore",
-    "copurchase_ktruss",
-    "copurchase_hopplot",
-    "copurchase_hyperball",
-    "copurchase_eff_diameter",
-    "copurchase_eff_diameter_hb",
-    "embedding_pca_power",
-    "embedding_pca_topk",
-    "minhash_calibration",
-]
-
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:] or DEFAULT
+    if len(sys.argv) < 4 or sys.argv[2] not in ("before", "after"):
+        sys.exit(__doc__)
+    out_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from tradesignal_mtm_runner_spark.cache_registry import release_caches
@@ -47,14 +28,13 @@ def main() -> None:
     from tradesignal_mtm_runner_spark.session import get_spark
 
     registry = {**QUERIES, **EXTRA_QUERIES}
+    unknown = [n for n in names if n not in registry]
+    if unknown:
+        sys.exit(f"unknown queries: {', '.join(unknown)}")
     spark = get_spark(app_name="capture_plans", master="local[8]",
                       shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r16",
-    )
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = registry[name](spark, sf_dir)

@@ -1,19 +1,20 @@
 """bench.py round-over-round guard: the vs_prev_detail summary may only
 compare against a previous detail file measured at the same core
 count. A file without ``cpus`` has an unknown core count and is
-skipped, not taken as the current one."""
+skipped, not taken as the current one. A non-default core count
+writes and reads its own ``_c{cpus}`` detail slots."""
 
 from __future__ import annotations
 
 import json
 import os
 
-from bench import _vs_prev_detail
+from bench import DEFAULT_CPUS, _detail_slot, _vs_prev_detail
 
 
-def _write(repo, rnd, payload):
+def _write(repo, rnd, payload, cpus=DEFAULT_CPUS):
     os.makedirs(os.path.join(repo, "docs"), exist_ok=True)
-    with open(os.path.join(repo, "docs", f"BENCH_local_r{rnd:02d}.json"), "w") as fh:
+    with open(os.path.join(repo, _detail_slot(rnd, cpus)), "w") as fh:
         json.dump(payload, fh)
 
 
@@ -34,3 +35,26 @@ def test_no_matching_core_count_gives_none(tmp_path):
     _write(repo, 9, {"queries": {"a": 1.0}})
     _write(repo, 8, {"cpus": 8, "queries": {"a": 1.0}})
     assert _vs_prev_detail(10, 4, {"a": 1.0}, repo=repo) is None
+
+
+def test_detail_slot_tags_non_default_core_counts():
+    assert _detail_slot(18, DEFAULT_CPUS) == "docs/BENCH_local_r18.json"
+    assert _detail_slot(18, 8) == "docs/BENCH_local_r18_c8.json"
+    assert _detail_slot(5, 4, "_sf1") == "docs/BENCH_local_r05_sf1_c4.json"
+
+
+def test_non_default_cores_walk_back_through_their_own_slots(tmp_path):
+    repo = str(tmp_path)
+    # the newest headline slot holds a default-core run: never compared
+    # with a 4-core run; the 4-core run of the round before is
+    _write(repo, 9, {"cpus": DEFAULT_CPUS, "queries": {"a": 9.0}})
+    _write(repo, 8, {"cpus": 4, "queries": {"a": 2.0}}, cpus=4)
+    _write(repo, 8, {"cpus": DEFAULT_CPUS, "queries": {"a": 7.0}})
+    got = _vs_prev_detail(10, 4, {"a": 1.0}, repo=repo)
+    assert (got["prev_round"], got["geomean_speedup"]) == (8, 2.0)
+    # a mislabelled _c slot (wrong recorded cpus) is skipped too
+    _write(repo, 9, {"cpus": 8, "queries": {"a": 5.0}}, cpus=4)
+    assert _vs_prev_detail(10, 4, {"a": 1.0}, repo=repo)["prev_round"] == 8
+    # the default core count reads only the headline slots
+    got = _vs_prev_detail(10, DEFAULT_CPUS, {"a": 1.0}, repo=repo)
+    assert (got["prev_round"], got["geomean_speedup"]) == (9, 9.0)

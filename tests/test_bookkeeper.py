@@ -198,6 +198,22 @@ def test_buy_while_short_does_not_open_long():
     assert trades[0].close_reason == "SIGNAL"
 
 
+def test_non_integer_minute_roi_key():
+    """roi {0.5: 0.01, 0: 0.04}: the half-minute tier (30 s) activates
+    after 30 s, so a +2% trade closes at the 40 s bar and not at the
+    20 s bar. The engine reads RoiHelper's tier table, which pairs each
+    offset with its own value. PnlCalcConfig truncates minute keys to
+    int, so the table is set on the built config here."""
+    ts = np.array([0.0, 20.0, 40.0, 60.0])
+    close = np.array([100.0, 102.0, 102.0, 102.0])
+    buy, sell = signals(4, buys=[0])
+    cfg = default_cfg()
+    cfg.roi = {0.5: 0.01, 0: 0.04}
+    mtm, trades = simulate_symbol(ts, close, buy, sell, cfg)
+    assert len(trades) == 1
+    assert (trades[0].close_reason, trades[0].exit_ts) == ("ROI", 40.0)
+
+
 def test_roi_tiers_minimum_active():
     """roi {0: 0.04, 20: 0.02}: before 20min close needs pnl>0.04,
     after 20min pnl>0.02 (reference helper.py can_take_profit)."""

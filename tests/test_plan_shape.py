@@ -474,3 +474,39 @@ def test_no_raw_mkdtemp_outside_cache_registry():
     if "tempfile.mkdtemp" in (root / "bench.py").read_text():
         offenders.append("bench.py")
     assert offenders == [], offenders
+
+
+def test_bookkeeper_is_one_exchange_sort_map_plan(spark):
+    """run_mtm_bookkeeper (timeline and trades) and the blocked sweep
+    build the one bookkeeper plan: exactly one Exchange, hash-
+    partitioned on the cell key (symbol, plus _blk for a sweep), one
+    in-partition Sort, one MapInPandas, and no grouped
+    FlatMapGroupsInPandas (whose per-group Arrow round trips the plan
+    exists to avoid)."""
+    import re
+
+    from tradesignal_mtm_runner_spark.config import PnlCalcConfig
+    from tradesignal_mtm_runner_spark.mtm_shared import _signals
+    from tradesignal_mtm_runner_spark.operators.bookkeeper import (
+        run_mtm_bookkeeper,
+        run_mtm_param_sweep_blocked,
+    )
+
+    sig = _signals(spark, SF_SMOKE)
+    grid = {c: PnlCalcConfig.get_default() for c in "abc"}
+    cases = [
+        (run_mtm_bookkeeper(sig), ["symbol"]),
+        (run_mtm_bookkeeper(sig, output="trades"), ["symbol"]),
+        (run_mtm_param_sweep_blocked(sig, grid, block_size=1), ["symbol", "_blk"]),
+        (run_mtm_param_sweep_blocked(sig, grid, block_size=8), ["symbol", "_blk"]),
+    ]
+    for df, key in cases:
+        plan = P.explain_str(df, "simple")
+        exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", plan)
+        assert len(exchanges) == 1, plan
+        kind, args = exchanges[0]
+        assert kind == "hashpartitioning", plan
+        assert [a.split("#")[0] for a in args.split(", ")[:-1]] == key, plan
+        assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+        assert len(re.findall(r"\bMapInPandas\b", plan)) == 1, plan
+        assert "FlatMapGroupsInPandas" not in plan

@@ -622,50 +622,31 @@ def test_watermark_drops_late_data_in_append_mode(spark, tmp_path):
     assert oldest >= bulk_min_epoch - 60
 
 
-def test_sweep_streaming_matches_batch_across_microbatches(spark, tmp_path):
-    """The streaming strategy-grid sweep must carry per-(symbol,
-    config) state across micro-batches: 3-file replay == one batch
-    run of the single-config engine per grid cell (VERDICT r5 item
-    9 — multi-config keys in the state store)."""
-    from tradesignal_mtm_runner_spark.config import PnlCalcConfig
-    from tradesignal_mtm_runner_spark.operators.mtm import signal_mtm_timeline
-    from tradesignal_mtm_runner_spark.streaming.mtm_stream import (
-        streaming_mtm_sweep,
-    )
+_SWEEP_GRID = {"a": (0.001, 0.0001), "b": (0.0, 0.0), "c": (0.002, 0.0)}
 
-    grid = {"a": (0.001, 0.0001), "b": (0.0, 0.0), "c": (0.002, 0.0)}
-    pdf = _signals_pdf(spark)
 
-    src = tmp_path / "sweep_stream_src"
-    os.makedirs(src)
-    cuts = np.array_split(np.arange(len(pdf)), 3)
-    for i, idx in enumerate(cuts):
+def _write_sweep_chunks(pdf, src, parts, n_parts=3):
+    """Bars cut into n_parts time-ordered parquet files; writes the
+    files whose index is in ``parts``, each with a later mtime than the
+    one before (the file source reads oldest first)."""
+    os.makedirs(src, exist_ok=True)
+    cuts = np.array_split(np.arange(len(pdf)), n_parts)
+    for i in parts:
         p = str(src / f"chunk-{i:03d}.parquet")
-        chunk = pdf.iloc[idx].copy()
+        chunk = pdf.iloc[cuts[i]].copy()
         chunk["timestamp"] = chunk["timestamp"].astype("datetime64[us]")
         chunk.to_parquet(p, index=False)
         t = time.time() - 100 + i * 10
         os.utime(p, (t, t))
 
-    schema = spark.createDataFrame(pdf.head(1)).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    sink = "mtm_sweep_stream_parity"
-    q = (
-        streaming_mtm_sweep(stream, grid)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_raise(q)
-    got_all = spark.table(sink).toPandas()
-    assert sorted(got_all["config_id"].unique()) == sorted(grid)
 
+def _assert_sweep_matches_batch(spark, got_all, pdf, grid):
+    """Each config's streamed rows == one batch run of the single-config
+    engine with that (fee, tax)."""
+    from tradesignal_mtm_runner_spark.config import PnlCalcConfig
+    from tradesignal_mtm_runner_spark.operators.mtm import signal_mtm_timeline
+
+    assert sorted(got_all["config_id"].unique()) == sorted(grid)
     for cid, (fee, tax) in grid.items():
         cfg = PnlCalcConfig(
             roi={0: float("inf")}, stoploss=float("-inf"),
@@ -694,62 +675,75 @@ def test_sweep_streaming_matches_batch_across_microbatches(spark, tmp_path):
             assert np.isclose(a, b, rtol=0, atol=1e-9).all(), (cid, col)
 
 
-def test_sweep_stream_blocked_equals_exploded(spark, tmp_path):
-    """The config-BLOCKED streaming sweep (one state key per symbol,
-    all C machines over one bar copy, shuffle volume / C — the shape
-    q_mtm_sweep_stream ships since r7) must be value-identical to the
-    exploded per-(symbol, config)-key form across a multi-batch
-    replay, cross-batch state carry included."""
+def test_sweep_streaming_matches_batch_across_microbatches(spark, tmp_path):
+    """The blocked streaming strategy-grid sweep must carry every
+    config's state across micro-batches: a 3-file replay == one batch
+    run of the single-config engine per grid cell."""
     from tradesignal_mtm_runner_spark.streaming.mtm_stream import (
-        streaming_mtm_sweep,
         streaming_mtm_sweep_blocked,
     )
 
-    grid = {"a": (0.001, 0.0001), "b": (0.0, 0.0), "c": (0.002, 0.0)}
     pdf = _signals_pdf(spark)
-    src = tmp_path / "sweep_blocked_src"
-    os.makedirs(src)
-    cuts = np.array_split(np.arange(len(pdf)), 3)
-    for i, idx in enumerate(cuts):
-        p = str(src / f"chunk-{i:03d}.parquet")
-        chunk = pdf.iloc[idx].copy()
-        chunk["timestamp"] = chunk["timestamp"].astype("datetime64[us]")
-        chunk.to_parquet(p, index=False)
-        t = time.time() - 100 + i * 10
-        os.utime(p, (t, t))
+    src = tmp_path / "sweep_stream_src"
+    _write_sweep_chunks(pdf, src, range(3))
+    schema = spark.createDataFrame(pdf.head(1)).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    sink = "mtm_sweep_stream_parity"
+    q = (
+        streaming_mtm_sweep_blocked(stream, _SWEEP_GRID)
+        .writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_or_raise(q)
+    assert len(q.recentProgress) >= 3
+    _assert_sweep_matches_batch(spark, spark.table(sink).toPandas(), pdf, _SWEEP_GRID)
+
+
+def test_sweep_stream_restart_restores_mtm_state(spark, tmp_path):
+    """MTM state survives a query restart: the blocked streaming sweep
+    runs over two files into a parquet sink and stops; a third file
+    arrives and a NEW query on the same checkpoint resumes from the
+    committed per-symbol state rows. The union of both runs' output
+    equals the batch engine per config — a lost or reset state row
+    would reopen flat with pnl at 0 and break the pnl carry."""
+    from tradesignal_mtm_runner_spark import sinks
+    from tradesignal_mtm_runner_spark.streaming.mtm_stream import (
+        streaming_mtm_sweep_blocked,
+    )
+
+    pdf = _signals_pdf(spark)
+    src = tmp_path / "sweep_restart_src"
+    out = str(tmp_path / "sweep_restart_out")
+    ckpt = str(tmp_path / "sweep_restart_ckpt")
     schema = spark.createDataFrame(pdf.head(1)).schema
 
-    def run(builder, sink):
+    def run_once():
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        q = (
-            builder(stream, grid)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        q = sinks.stream_to_parquet(
+            streaming_mtm_sweep_blocked(stream, _SWEEP_GRID), out, ckpt
         )
         await_or_raise(q)
-        return (
-            spark.table(sink)
-            .toPandas()
-            .sort_values(["config_id", "symbol", "timestamp", "event_id"])
-            .reset_index(drop=True)
-        )
 
-    a = run(streaming_mtm_sweep, "sweep_par_exploded")
-    b = run(streaming_mtm_sweep_blocked, "sweep_par_blocked")
-    assert len(a) == len(b) > 0
-    for col in ["config_id", "symbol", "position", "opened", "closed"]:
-        assert (a[col].values == b[col].values).all(), col
-    for col in ["entry_price", "mtm_ratio", "pnl_ratio"]:
-        x = a[col].astype(float).fillna(np.inf).values
-        y = b[col].astype(float).fillna(np.inf).values
-        assert np.isclose(x, y, rtol=0, atol=0).all(), col
+    _write_sweep_chunks(pdf, src, [0, 1])
+    run_once()
+    n1 = spark.read.parquet(out).count()
+    assert n1 > 0
+    _write_sweep_chunks(pdf, src, [2])
+    run_once()
+    got_all = spark.read.parquet(out).toPandas()
+    assert len(got_all) == len(pdf) * len(_SWEEP_GRID) > n1
+    _assert_sweep_matches_batch(spark, got_all, pdf, _SWEEP_GRID)
 
 
 def test_foreach_batch_upsert_state_carry_and_idempotence(spark, tmp_path):

@@ -6,8 +6,8 @@ The reference backs this with a custom BTree-indexed list
 O(log R) active-tier lookup with no custom data structure, and the
 prefix-min trick turns "pnl exceeds ANY active threshold" into one
 comparison (pnl > min(active thresholds)). The bookkeeper engine
-inlines exactly this logic (operators/bookkeeper.py:128-172); this
-class is the standalone, user-facing form.
+(``operators.bookkeeper.simulate_symbol``) reads the same table through
+``tier_table``; this class is also the standalone, user-facing form.
 """
 
 from __future__ import annotations
@@ -34,6 +34,14 @@ class RoiHelper:
         thresholds = np.array([v for _, v in items], dtype=np.float64)
         self._thresholds = thresholds
         self._prefix_min = np.minimum.accumulate(thresholds)
+
+    @property
+    def tier_table(self) -> tuple[np.ndarray, np.ndarray]:
+        """(offsets_s, prefix_min): tier offsets in seconds, ascending,
+        and the running minimum of their thresholds. At holding age a
+        the active minimum threshold is prefix_min[k] for the rightmost
+        k with offsets_s[k] <= a (no active tier when there is none)."""
+        return self._roi_seconds, self._prefix_min
 
     def _age_seconds(self, entry_date: datetime, current_date: datetime) -> float:
         return (current_date - entry_date).total_seconds()

@@ -8,12 +8,23 @@ inventory.
 
 Price-dependent closes (ROI/stoploss) feed back into position state,
 so the process is inherently sequential WITHIN a symbol — no window
-algebra can express it. The Spark plan is therefore
-``groupBy(symbol).applyInPandas(simulate)``: Arrow-batched transfer,
-one numpy state machine per group, embarrassingly parallel ACROSS
-symbols. That is the axis that scales: at 100 TB the input is ~1e5-1e6
-symbol×strategy groups of bounded length (a year of 1-minute bars is
-~526k rows), each fitting comfortably in one task.
+algebra can express it. ``simulate_symbol`` is that sequential core
+(one numpy state machine per symbol and config); everything else is
+ONE plan and ONE cell function around it:
+
+  plan  Exchange(hash on the cell key) -> Sort(cell key, timestamp,
+        event_id) -> one MapInPandas that streams each partition and
+        hands every complete cell to the cell function. The sort is the
+        bar-order contract: cells are never re-sorted in pandas.
+  cell  the bars of one symbol (run_mtm_bookkeeper) or of one
+        (symbol, config block) (run_mtm_param_sweep_blocked), turned
+        into numpy once; simulate_symbol runs once per config of the
+        cell, and one frame per cell carries every config's timeline
+        (or, for a single run, its trade lists).
+
+The blocked sweep replicates bars once per block of k configs, so the
+shuffle carries bars x ceil(C/k) rows and symbols x ceil(C/k) cells run
+in parallel: the state-parallel vs data-parallel split.
 
 Per-bar semantics replicated exactly (order matters):
   1. mtm(t) = sum over open trades entered strictly before t of
@@ -59,6 +70,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import PnlCalcConfig
+from ..helper import RoiHelper
 from ..models import InventoryMode
 
 _LONG, _SHORT = 1, -1
@@ -146,15 +158,8 @@ def simulate_symbol(
     stop = abs(config.stoploss) if config.has_stoploss else np.inf
     max_pos = config.max_position_per_symbol
 
-    # roi tiers: offsets ascending (seconds) with prefix-min thresholds;
-    # active minimum threshold = prefix_min[rightmost offset <= age].
-    # Offsets pair with their values directly (never reconstruct the
-    # dict key from seconds — non-integer minute keys would mismap).
-    roi_items = sorted((float(k) * 60.0, float(v)) for k, v in config.roi.items())
-    roi_off = np.array([k for k, _ in roi_items], dtype=np.float64)
-    roi_min = np.minimum.accumulate(
-        np.array([v for _, v in roi_items], dtype=np.float64)
-    )
+    # active minimum roi threshold = roi_min[rightmost roi_off <= age]
+    roi_off, roi_min = RoiHelper(config.roi).tier_table
     roi_live = config.has_roi
 
     longs: list[_Trade] = []
@@ -294,71 +299,95 @@ def simulate_symbol(
     return mtm, done + longs + shorts
 
 
-def _make_apply_fn(
-    config: PnlCalcConfig,
+SWEEP_TIMELINE_SCHEMA = T.StructType(
+    [T.StructField("config_id", T.StringType(), False)] + TIMELINE_SCHEMA.fields
+)
+
+_BAR_COLS = ("symbol", "timestamp", "event_id", "close", "buy", "sell")
+
+
+def _trades_frame(symbol, trades: list[_Trade], fee: float) -> pd.DataFrame:
+    """One symbol's trade archive + outstanding trades. pnl_normalized
+    includes the entry and exit fee like the reference's ProxyTrade.pnl
+    (models.py:117-131, fee on entry price)."""
+    rows = []
+    for tr in trades:
+        closed = tr.exit_ts is not None
+        sgn = 1.0 if tr.direction == _LONG else -1.0
+        pnl = None
+        if closed:
+            pnl = (sgn * (tr.exit_price - tr.entry_price) / tr.entry_price) - 2 * fee
+        rows.append(
+            {
+                "symbol": symbol,
+                "direction": "LONG" if tr.direction == _LONG else "SHORT",
+                "entry_datetime": np.datetime64(int(round(tr.entry_ts * 1e6)), "us"),
+                "entry_price": tr.entry_price,
+                "exit_datetime": np.datetime64(int(round(tr.exit_ts * 1e6)), "us") if closed else None,
+                "exit_price": tr.exit_price if closed else None,
+                "is_closed": closed,
+                "close_reason": tr.close_reason,
+                "pnl_normalized": pnl,
+            }
+        )
+    return pd.DataFrame(rows, columns=[f.name for f in TRADES_SCHEMA.fields])
+
+
+def _make_cell_fn(
+    blocks: list[list[tuple[str | None, PnlCalcConfig]]],
     inventory_mode: InventoryMode,
     output: str,
-    strict: bool = False,
-    compat_multi_close_skip: bool = False,
+    strict: bool,
+    compat_multi_close_skip: bool,
 ):
-    fee = abs(config.fee_rate)
+    """The one cell function. ``cell((symbol[, block]), pdf)`` turns
+    the cell's bars into numpy ONCE, runs simulate_symbol for each
+    (config_id, config) of its block, and builds one frame: the bar
+    columns tiled once per config and pnl_ratio as the row-wise cumsum
+    of the k x n mtm matrix. The bars arrive in plan order; the cell
+    never re-sorts them. A config_id of None is the single-config run:
+    no config_id column, and output="trades" gives its trade lists."""
 
-    def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["timestamp", "event_id"] if "event_id" in pdf.columns else ["timestamp"])
+    def cell(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        runs = blocks[int(key[1])] if len(key) > 1 else blocks[0]
         ts = pdf["timestamp"].to_numpy()
         ts_sec = ts.astype("datetime64[us]").astype(np.int64) / 1e6
         close = pdf["close"].to_numpy(dtype=np.float64)
         buy = pdf["buy"].to_numpy(dtype=np.int64)
         sell = pdf["sell"].to_numpy(dtype=np.int64)
-        mtm, trades = simulate_symbol(
-            ts_sec, close, buy, sell, config, inventory_mode, strict=strict,
-            compat_multi_close_skip=compat_multi_close_skip,
+        sims = [
+            simulate_symbol(
+                ts_sec, close, buy, sell, cfg, inventory_mode, strict=strict,
+                compat_multi_close_skip=compat_multi_close_skip,
+            )
+            for _, cfg in runs
+        ]
+        if output == "trades":
+            return _trades_frame(key[0], sims[0][1], abs(runs[0][1].fee_rate))
+        k = len(runs)
+        mtm = np.stack([m for m, _ in sims])
+        ids = [cid for cid, _ in runs]
+        tagged = {} if ids[0] is None else {"config_id": np.repeat(ids, len(ts))}
+        return pd.DataFrame(
+            {
+                **tagged,
+                "symbol": key[0],
+                "timestamp": np.tile(ts, k),
+                "close": np.tile(close, k),
+                "buy": np.tile(buy.astype(np.int32), k),
+                "sell": np.tile(sell.astype(np.int32), k),
+                "mtm_ratio": mtm.ravel(),
+                "pnl_ratio": np.cumsum(mtm, axis=1).ravel(),
+            }
         )
-        symbol = pdf["symbol"].iloc[0]
-        if output == "timeline":
-            return pd.DataFrame(
-                {
-                    "symbol": symbol,
-                    "timestamp": ts,
-                    "close": close,
-                    "buy": buy.astype(np.int32),
-                    "sell": sell.astype(np.int32),
-                    "mtm_ratio": mtm,
-                    "pnl_ratio": np.cumsum(mtm),
-                }
-            )
-        # trades output; pnl_normalized includes entry+exit fee like the
-        # reference's ProxyTrade.pnl (models.py:117-131, fee on entry price)
-        rows = []
-        for tr in trades:
-            closed = tr.exit_ts is not None
-            sgn = 1.0 if tr.direction == _LONG else -1.0
-            pnl = None
-            if closed:
-                pnl = (sgn * (tr.exit_price - tr.entry_price) / tr.entry_price) - 2 * fee
-            rows.append(
-                {
-                    "symbol": symbol,
-                    "direction": "LONG" if tr.direction == _LONG else "SHORT",
-                    "entry_datetime": np.datetime64(int(round(tr.entry_ts * 1e6)), "us"),
-                    "entry_price": tr.entry_price,
-                    "exit_datetime": np.datetime64(int(round(tr.exit_ts * 1e6)), "us") if closed else None,
-                    "exit_price": tr.exit_price if closed else None,
-                    "is_closed": closed,
-                    "close_reason": tr.close_reason,
-                    "pnl_normalized": pnl,
-                }
-            )
-        cols = [f.name for f in TRADES_SCHEMA.fields]
-        return pd.DataFrame(rows, columns=cols)
 
-    return apply_fn
+    return cell
 
 
 def _batched_group_stream(key_cols: list[str], group_fn):
     """mapInPandas generator that re-chunks a (key-sorted, key-hash-
     partitioned) batch stream into COMPLETE key groups and applies
-    ``group_fn(key_tuple, pdf)`` per group.
+    ``group_fn(key_tuple, pdf)`` per group, rows in stream order.
 
     Why not groupBy().applyInPandas: that path pays per-GROUP plan and
     Arrow overhead (~2 ms/group measured), which dominates when groups
@@ -369,25 +398,55 @@ def _batched_group_stream(key_cols: list[str], group_fn):
     per-group semantics. Rows of the partition's current LAST key are
     buffered until the next batch proves the group complete."""
 
+    def groups(pdf: pd.DataFrame):
+        for key, g in pdf.groupby(key_cols, sort=False):
+            yield group_fn(key, g)
+
     def fn(batches):
         pending: pd.DataFrame | None = None
         for pdf in batches:
-            if pending is not None and len(pending):
+            if pending is not None:
                 pdf = pd.concat([pending, pdf], ignore_index=True)
             if not len(pdf):
                 continue
-            last = pdf.iloc[-1]
-            tail = np.ones(len(pdf), dtype=bool)
-            for c in key_cols:
-                tail &= (pdf[c] == last[c]).to_numpy()
-            complete, pending = pdf[~tail], pdf[tail]
-            for key, g in complete.groupby(key_cols, sort=False):
-                yield group_fn(key if isinstance(key, tuple) else (key,), g)
-        if pending is not None and len(pending):
-            for key, g in pending.groupby(key_cols, sort=False):
-                yield group_fn(key if isinstance(key, tuple) else (key,), g)
+            keys = pdf[key_cols]
+            tail = (keys == keys.iloc[-1]).all(axis=1).to_numpy()
+            pending = pdf[tail]
+            yield from groups(pdf[~tail])
+        if pending is not None:
+            yield from groups(pending)
 
     return fn
+
+
+def _cell_plan(
+    signals: DataFrame, n_blocks: int | None, cell, schema: T.StructType
+) -> DataFrame:
+    """The one bookkeeper plan: Exchange(hash on the cell key) ->
+    Sort(cell key, timestamp[, event_id]) -> ONE MapInPandas that hands
+    each complete cell to ``cell``. The in-partition sort is the
+    bar-order contract. A sweep (n_blocks set) replicates each bar once
+    per config block as ``_blk``, so its cell is (symbol, block); a
+    single run's cell is the symbol."""
+    cols = [c for c in _BAR_COLS if c in signals.columns]
+    bars = signals.select(*cols)
+    keys = ["symbol"]
+    if n_blocks is not None:
+        bars = bars.withColumn(
+            "_blk", F.explode(F.array(*[F.lit(b) for b in range(n_blocks)]))
+        )
+        keys.append("_blk")
+    # explicit partition count: AQE's byte-based coalescing would fold
+    # this Python-CPU-bound stage into ~2 tasks (the engine costs CPU
+    # per row, not bytes); a user-specified count is exempt from
+    # coalescing and keeps every core busy
+    n_part = int(signals.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    order = [c for c in ("timestamp", "event_id") if c in cols]
+    return (
+        bars.repartition(n_part, *keys)
+        .sortWithinPartitions(*keys, *order)
+        .mapInPandas(_batched_group_stream(keys, cell), schema=schema)
+    )
 
 
 def run_mtm_bookkeeper(
@@ -398,97 +457,29 @@ def run_mtm_bookkeeper(
     strict: bool = False,
     compat_multi_close_skip: bool = False,
 ) -> DataFrame:
-    """Distributed full-engine MTM run.
+    """Distributed full-engine MTM run: the one plan with one cell per
+    symbol.
 
-    signals: DataFrame(symbol, timestamp[, event_id], close, buy, sell).
+    signals: DataFrame(symbol, timestamp[, event_id], close, buy, sell);
+    bars run in (timestamp, event_id) order whatever the input order.
     output: "timeline" (per-bar mtm/pnl) or "trades" (archive +
     outstanding, reference Mtm_Result trade lists).
     strict: raise the reference's public exception types on disallowed
     opens instead of the reference engine's silent skip (the raise
     happens inside the executor task; TradeMtmRunner re-raises the
     typed original driver-side via exceptions.reraise_typed).
-
-    Plan shape: one hash shuffle on symbol + in-partition sort, then
-    ONE mapInPandas pass that splits partitions back into symbol
-    groups (_batched_group_stream) — same per-group semantics as
-    groupBy().applyInPandas without its per-group Arrow overhead.
     """
     config = config or PnlCalcConfig.get_default()
     if output not in ("timeline", "trades"):
         from ..exceptions import UnSupportedException
 
         raise UnSupportedException("output must be 'timeline' or 'trades'")
+    cell = _make_cell_fn(
+        [[(None, config)]], inventory_mode, output, strict,
+        compat_multi_close_skip,
+    )
     schema = TIMELINE_SCHEMA if output == "timeline" else TRADES_SCHEMA
-    cols = [c for c in ["symbol", "timestamp", "event_id", "close", "buy", "sell"] if c in signals.columns]
-    order = [c for c in ["symbol", "timestamp", "event_id"] if c in cols]
-    per_group = _make_apply_fn(
-        config, inventory_mode, output, strict=strict,
-        compat_multi_close_skip=compat_multi_close_skip,
-    )
-    # explicit partition count: AQE's byte-based coalescing would fold
-    # this Python-CPU-bound stage into ~2 tasks (the engine costs CPU
-    # per row, not bytes); a user-specified count is exempt from
-    # coalescing and keeps every core busy
-    n_part = int(signals.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        signals.select(*cols)
-        .repartition(n_part, "symbol")
-        .sortWithinPartitions(*order)
-        .mapInPandas(
-            _batched_group_stream(["symbol"], lambda _key, g: per_group(g)),
-            schema=schema,
-        )
-    )
-
-
-SWEEP_TIMELINE_SCHEMA = T.StructType(
-    [T.StructField("config_id", T.StringType(), False)] + TIMELINE_SCHEMA.fields
-)
-
-
-def run_mtm_param_sweep(
-    signals: DataFrame,
-    configs: dict[str, PnlCalcConfig],
-    inventory_mode: InventoryMode = InventoryMode.FIFO,
-) -> DataFrame:
-    """One engine pass over the full strategy grid: every (symbol,
-    config) pair becomes an independent applyInPandas group.
-
-    This is the shape of the real 100 TB workload — backtests run as
-    symbols x strategies x parameter sets, and each cell is an
-    embarrassingly parallel state-machine run. The bar rows are
-    replicated per config through the one shuffle (explode before
-    groupBy), which is exactly the data each group needs and keeps
-    every cell schedulable on any executor. Returns the per-bar
-    timeline tagged with config_id; feed to summarize_timeline(...,
-    group_cols=["symbol", "config_id"]) for the grid summary."""
-    ids = sorted(configs)
-    cols = [c for c in ["symbol", "timestamp", "event_id", "close", "buy", "sell"] if c in signals.columns]
-    order = [c for c in ["symbol", "timestamp", "event_id"] if c in cols]
-    sweep = signals.select(*cols).withColumn(
-        "config_id", F.explode(F.array(*[F.lit(i) for i in ids]))
-    )
-
-    fns = {
-        cid: _make_apply_fn(cfg, inventory_mode, "timeline")
-        for cid, cfg in configs.items()
-    }
-
-    def group_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        config_id = key[1]
-        out = fns[config_id](pdf)
-        out.insert(0, "config_id", config_id)
-        return out
-
-    n_part = int(signals.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        sweep.repartition(n_part, "symbol", "config_id")
-        .sortWithinPartitions("symbol", "config_id", *order[1:])
-        .mapInPandas(
-            _batched_group_stream(["symbol", "config_id"], group_fn),
-            schema=SWEEP_TIMELINE_SCHEMA,
-        )
-    )
+    return _cell_plan(signals, None, cell, schema)
 
 
 def run_mtm_param_sweep_blocked(
@@ -497,49 +488,25 @@ def run_mtm_param_sweep_blocked(
     block_size: int = 8,
     inventory_mode: InventoryMode = InventoryMode.FIFO,
 ) -> DataFrame:
-    """Config-BLOCK variant of run_mtm_param_sweep (VERDICT r5 item 5).
+    """Strategy-grid sweep: every (symbol, config) timeline of the grid,
+    tagged with config_id, in one pass of the one plan.
 
-    The per-config explode replicates every bar row once per config
-    THROUGH the shuffle — at C configs the shuffle volume is bars x C.
-    Here bars are replicated once per block of k configs instead
-    (shuffle volume bars x ceil(C/k)); each (symbol, block) cell then
-    loops its k state machines over ONE in-memory copy of the bars,
-    emitting k tagged timelines from the same Arrow batch. Parallelism
-    drops from symbols x C cells to symbols x ceil(C/k) — pick k so
-    that grid/k still saturates the cluster (k=8 at C=32 keeps 4
-    blocks per symbol). Output schema and values are identical to the
-    per-config sweep (pinned in tests/test_param_sweep.py)."""
+    The sorted config ids are cut into blocks of ``block_size``. Bars
+    are replicated once per BLOCK through the shuffle (volume bars x
+    ceil(C/k)), and each (symbol, block) cell runs its k state machines
+    over one numpy copy of the bars. Parallelism is symbols x ceil(C/k)
+    cells: pick k so that grid/k still saturates the cluster (k=8 at
+    C=32 keeps 4 blocks per symbol). block_size=1 is the per-config
+    form. Values equal per-config run_mtm_bookkeeper runs (pinned in
+    tests/test_param_sweep.py). Feed to summarize_timeline(...,
+    group_cols=["symbol", "config_id"]) for the grid summary."""
     ids = sorted(configs)
-    blocks = [ids[i : i + block_size] for i in range(0, len(ids), block_size)]
-    cols = [c for c in ["symbol", "timestamp", "event_id", "close", "buy", "sell"] if c in signals.columns]
-    order = [c for c in ["symbol", "timestamp", "event_id"] if c in cols]
-    sweep = signals.select(*cols).withColumn(
-        "_blk", F.explode(F.array(*[F.lit(b) for b in range(len(blocks))]))
-    )
-
-    fns = {
-        cid: _make_apply_fn(cfg, inventory_mode, "timeline")
-        for cid, cfg in configs.items()
-    }
-
-    def group_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        bars = pdf.drop(columns=["_blk"])
-        outs = []
-        for cid in blocks[int(key[1])]:
-            out = fns[cid](bars)
-            out.insert(0, "config_id", cid)
-            outs.append(out)
-        return pd.concat(outs, ignore_index=True)
-
-    n_part = int(signals.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        sweep.repartition(n_part, "symbol", "_blk")
-        .sortWithinPartitions("symbol", "_blk", *order[1:])
-        .mapInPandas(
-            _batched_group_stream(["symbol", "_blk"], group_fn),
-            schema=SWEEP_TIMELINE_SCHEMA,
-        )
-    )
+    blocks = [
+        [(cid, configs[cid]) for cid in ids[i : i + block_size]]
+        for i in range(0, len(ids), block_size)
+    ]
+    cell = _make_cell_fn(blocks, inventory_mode, "timeline", False, False)
+    return _cell_plan(signals, len(blocks), cell, SWEEP_TIMELINE_SCHEMA)
 
 
 def summarize_timeline(

@@ -308,7 +308,10 @@ def q_mtm_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass (the symbols-x-strategies axis that dominates at 100 TB).
     Rows-only check; grid cells cross-check single-config runs in
     tests/test_param_sweep.py."""
-    from .operators.bookkeeper import run_mtm_param_sweep, summarize_timeline
+    from .operators.bookkeeper import (
+        run_mtm_param_sweep_blocked,
+        summarize_timeline,
+    )
 
     configs = {
         "base": PnlCalcConfig(roi={0: float("inf")}, stoploss=float("-inf")),
@@ -321,7 +324,7 @@ def q_mtm_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             enable_short_position=True, fee_rate=FEE,
         ),
     }
-    tl = run_mtm_param_sweep(_signals(spark, sf_dir), configs)
+    tl = run_mtm_param_sweep_blocked(_signals(spark, sf_dir), configs)
     s = summarize_timeline(tl, group_cols=["symbol", "config_id"])
     return s.select(
         "symbol",
@@ -334,71 +337,44 @@ def q_mtm_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_mtm_sweep_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sweep at the REAL grid scale: 32 configs (4 roi tiers x 4
-    stoplosses x 2 fee settings) x all symbols in one engine pass —
-    the symbols-x-strategies axis from SURVEY §4 at the density a
-    production backtest sweep actually runs. Purpose-built for the
-    throughput curve of the batched ``mapInPandas`` path (bench.py
-    reports configs/sec); correctness of the machinery is pinned by
-    mtm_param_sweep's cross-checks at 4 configs and the blocked-vs-
-    per-config parity test, so this entry is rows-only.
+#: the real-scale sweep grid: 4 roi tiers x 4 stoplosses x 2 fee
+#: settings = 32 configs (mtm_sweep_scale; bench.py times the same grid
+#: at block_size=1 as the per-config reference)
+SWEEP_SCALE_CONFIGS = {
+    f"{rk}__{sk}__{fk}": PnlCalcConfig(roi={0: rv}, stoploss=sv, fee_rate=fv)
+    for rk, rv in (
+        ("roi_inf", float("inf")), ("roi_10", 0.10), ("roi_5", 0.05), ("roi_2", 0.02)
+    )
+    for sk, sv in (
+        ("sl_inf", float("-inf")), ("sl_10", -0.10), ("sl_5", -0.05), ("sl_2", -0.02)
+    )
+    for fk, fv in (("fee0", 0.0), ("fee", FEE))
+}
 
-    Runs the config-BLOCK sweep (k=8): bars are replicated once per
+
+def q_mtm_sweep_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sweep at the REAL grid scale: SWEEP_SCALE_CONFIGS (32 configs) x
+    all symbols in one engine pass — the symbols-x-strategies axis from
+    SURVEY §4 at the density a production backtest sweep actually runs.
+    Purpose-built for the throughput curve of the batched
+    ``mapInPandas`` path (bench.py reports configs/sec); correctness of
+    the machinery is pinned by mtm_param_sweep's cross-checks and the
+    blocked-vs-single-config parity tests, so this entry is rows-only.
+
+    Runs the config-block sweep at k=8: bars are replicated once per
     block through the shuffle instead of once per config, dividing
     shuffle volume by k while symbols x (configs/k) cells keep the
-    cluster saturated. Measured at sf0.1/local[32] (VERDICT r5 item
-    5): 32 configs — explode 2.2 cfg/s vs block8 4.9 cfg/s; 128
-    configs — explode 1.9 cfg/s vs block8 8.1 cfg/s (4.4x); the
-    explode shape's cost grows with bars x configs shuffle volume,
-    the blocked shape's with bars x blocks. bench.py times the
-    explode twin once per round as the regression reference."""
+    cluster saturated. Measured at sf0.1/local[32]: 32 configs — k=1
+    2.2 cfg/s vs k=8 4.9 cfg/s; 128 configs — k=1 1.9 cfg/s vs k=8
+    8.1 cfg/s (4.4x)."""
     from .operators.bookkeeper import (
         run_mtm_param_sweep_blocked,
         summarize_timeline,
     )
 
-    rois = {"roi_inf": float("inf"), "roi_10": 0.10, "roi_5": 0.05, "roi_2": 0.02}
-    stops = {"sl_inf": float("-inf"), "sl_10": -0.10, "sl_5": -0.05, "sl_2": -0.02}
-    configs = {
-        f"{rk}__{sk}__{fk}": PnlCalcConfig(
-            roi={0: rv}, stoploss=sv, fee_rate=fv
-        )
-        for rk, rv in rois.items()
-        for sk, sv in stops.items()
-        for fk, fv in (("fee0", 0.0), ("fee", FEE))
-    }
     tl = run_mtm_param_sweep_blocked(
-        _signals(spark, sf_dir), configs, block_size=8
+        _signals(spark, sf_dir), SWEEP_SCALE_CONFIGS, block_size=8
     )
-    s = summarize_timeline(tl, group_cols=["symbol", "config_id"])
-    return s.select(
-        "symbol",
-        "config_id",
-        r9(F.col("pnl")).alias("pnl"),
-        r9(F.col("max_drawdown")).alias("max_drawdown"),
-        r9(F.col("sharpe_ratio")).alias("sharpe_ratio"),
-    )
-
-
-def q_mtm_sweep_scale_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The per-config explode twin of mtm_sweep_scale — same 32-config
-    grid through run_mtm_param_sweep. Kept as the bench regression
-    reference for the blocked-vs-explode comparison (not registered
-    as a driver query; bench.py times it once per round)."""
-    from .operators.bookkeeper import run_mtm_param_sweep, summarize_timeline
-
-    rois = {"roi_inf": float("inf"), "roi_10": 0.10, "roi_5": 0.05, "roi_2": 0.02}
-    stops = {"sl_inf": float("-inf"), "sl_10": -0.10, "sl_5": -0.05, "sl_2": -0.02}
-    configs = {
-        f"{rk}__{sk}__{fk}": PnlCalcConfig(
-            roi={0: rv}, stoploss=sv, fee_rate=fv
-        )
-        for rk, rv in rois.items()
-        for sk, sv in stops.items()
-        for fk, fv in (("fee0", 0.0), ("fee", FEE))
-    }
-    tl = run_mtm_param_sweep(_signals(spark, sf_dir), configs)
     s = summarize_timeline(tl, group_cols=["symbol", "config_id"])
     return s.select(
         "symbol",

@@ -3,17 +3,27 @@
 Re-expresses ``operators.mtm.signal_mtm_timeline`` (the feedback-free
 long-only / max_position=1 configuration — reference
 trade_reward.py:81-168 restricted) as a stateful streaming operator:
-``groupBy(symbol).applyInPandasWithState``. Per-symbol state is a
-5-tuple (position, entry_price, prev_close, pnl_cum, has_prev) — a
-few bytes per key, so state size scales with #symbols, not #bars:
-exactly the property an unbounded 100 TB stream needs. Batch parity
-is pytest-enforced: replaying the same bars through N micro-batches
-must reproduce the batch engine bar-for-bar (tests/test_streaming.py).
+``groupBy(symbol).applyInPandasWithState`` with ONE state function.
 
-Bars are processed in (timestamp, event_id) order within each
-micro-batch; cross-batch order is the stream's append order (file
-source: one file per trigger). Late/out-of-order bars across batches
-are out of scope here — the batch engine is the replay/repair path.
+- One machine (``_run_machine``) per config carries a 5-tuple
+  (position, entry_price, prev_close, pnl_cum, has_prev) across
+  micro-batches, so state scales with #symbols x #configs, not #bars.
+- ``streaming_mtm_timeline`` runs one machine per symbol key
+  (``STATE_SCHEMA``). ``streaming_mtm_sweep_blocked`` runs the whole
+  fee/tax grid per symbol key over ONE copy of the batch's bars, its C
+  5-tuples flattened into one state row (``_blocked_state_schema``).
+  Both layouts are the checkpoint format: a restarted query reads them
+  back field for field.
+- Bars are processed in (timestamp, event_id) order within each
+  micro-batch: applyInPandasWithState promises no row order, so the
+  state function sorts. Cross-batch order is the stream's append order
+  (file source: one file per trigger). Late/out-of-order bars across
+  batches are out of scope — the batch engine is the replay/repair
+  path.
+
+Batch parity is pytest-enforced: replaying the same bars through N
+micro-batches, a restart included, reproduces the batch engine
+bar-for-bar (tests/test_streaming.py).
 """
 
 from __future__ import annotations
@@ -68,9 +78,7 @@ def _run_machine(
     symbol, bars: pd.DataFrame, fee: float, tax: float, st: tuple
 ) -> tuple[dict, tuple]:
     """One single-config state machine over one micro-batch's sorted
-    bars: returns (output columns dict, updated 5-tuple state). Shared
-    by the per-key streaming engine and the config-BLOCKED sweep (k
-    machines over ONE copy of the bars)."""
+    bars: returns (output columns dict, updated 5-tuple state)."""
     pos, entry, prev_close, pnl_cum, has_prev = st
     out = {c.name: [] for c in OUTPUT_SCHEMA.fields}
     for ts, event_id, close, buy, sell in zip(
@@ -114,28 +122,38 @@ def _run_machine(
     return out, (pos, entry, prev_close, pnl_cum, has_prev)
 
 
-def _make_state_fn(fee_rate: float, laid_back_tax: float):
-    fee = abs(float(fee_rate))
-    tax = abs(float(laid_back_tax))
+def _make_state_fn(
+    fee_tax: list[tuple[float, float]], ids: list[str] | None = None
+):
+    """The one state function: machine i runs with fee_tax[i] over the
+    key's micro-batch bars, sorted by (timestamp, event_id), and keeps
+    its 5-tuple at slots 5i..5i+4 of the state row. ``ids`` tags
+    machine i's rows with config_id ids[i]; None emits the single
+    machine's rows untagged."""
+    params = [(abs(float(fee)), abs(float(tax))) for fee, tax in fee_tax]
+    n = len(params)
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            st = state.get
-        else:
-            st = (0, None, None, 0.0, 0)
-
+        flat = list(state.get) if state.exists else [0, None, None, 0.0, 0] * n
         chunks = [p for p in pdfs if len(p)]
         if not chunks:
-            state.update(tuple(st))
+            state.update(tuple(flat))
             return
         bars = pd.concat(chunks, ignore_index=True).sort_values(
             ["timestamp", "event_id"], kind="stable"
         )
-        out, st = _run_machine(key[0], bars, fee, tax, st)
-        state.update(st)
-        yield pd.DataFrame(out)
+        outs = []
+        for i, (fee, tax) in enumerate(params):
+            st = tuple(flat[5 * i : 5 * i + 5])
+            out, flat[5 * i : 5 * i + 5] = _run_machine(key[0], bars, fee, tax, st)
+            pdf = pd.DataFrame(out)
+            if ids is not None:
+                pdf.insert(0, "config_id", ids[i])
+            outs.append(pdf)
+        state.update(tuple(flat))
+        yield pd.concat(outs, ignore_index=True)
 
     return fn
 
@@ -150,14 +168,12 @@ def streaming_mtm_timeline(
     from the 5-column SIGNAL_COLUMNS contract (signal_stream's default
     schema, the CSV/JSONL loaders) don't carry one — synthesize a
     constant so the sort degrades to timestamp-only, exactly the
-    reference's pandas ordering (review r12: composing the connector
-    with this engine as documented died with KeyError('event_id')
-    executor-side)."""
+    reference's pandas ordering."""
     config = config or PnlCalcConfig.get_default()
     if "event_id" not in signals.columns:
         signals = signals.withColumn("event_id", F.lit(0).cast("long"))
     return signals.groupBy("symbol").applyInPandasWithState(
-        _make_state_fn(config.fee_rate, config.laid_back_tax),
+        _make_state_fn([(config.fee_rate, config.laid_back_tax)]),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
@@ -168,47 +184,6 @@ def streaming_mtm_timeline(
 SWEEP_OUTPUT_SCHEMA = StructType(
     [StructField("config_id", StringType())] + OUTPUT_SCHEMA.fields
 )
-
-
-def _make_sweep_state_fn(fee_tax: dict[str, tuple[float, float]]):
-    """Dispatch per-(symbol, config_id) state groups to the matching
-    single-config state machine; the group key's second element picks
-    the (fee, tax) parameters."""
-    inner = {
-        cid: _make_state_fn(fee, tax) for cid, (fee, tax) in fee_tax.items()
-    }
-
-    def fn(key, pdfs, state):
-        cid = key[1]
-        for out in inner[cid]((key[0],), pdfs, state):
-            out.insert(0, "config_id", cid)
-            yield out
-
-    return fn
-
-
-def streaming_mtm_sweep(
-    signals: DataFrame, fee_tax: dict[str, tuple[float, float]]
-) -> DataFrame:
-    """Strategy-grid MTM over a STREAM, EXPLODED form: each bar is
-    replicated across the config grid and every (symbol, config_id)
-    pair becomes an independent state-store key. State per key is the
-    same 5-tuple as the single-config engine. Kept as the parity
-    reference for the BLOCKED form below (which ships in the query
-    registry): shuffle volume here is bars x C, there bars x 1."""
-    from pyspark.sql import functions as F
-
-    ids = sorted(fee_tax)
-    sweep = signals.withColumn(
-        "config_id", F.explode(F.array(*[F.lit(i) for i in ids]))
-    )
-    return sweep.groupBy("symbol", "config_id").applyInPandasWithState(
-        _make_sweep_state_fn(fee_tax),
-        outputStructType=SWEEP_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def _blocked_state_schema(n: int) -> StructType:
@@ -227,55 +202,22 @@ def _blocked_state_schema(n: int) -> StructType:
     return StructType(fields)
 
 
-def _make_sweep_state_fn_blocked(fee_tax: dict[str, tuple[float, float]]):
-    ids = sorted(fee_tax)
-    params = [
-        (abs(float(fee_tax[c][0])), abs(float(fee_tax[c][1]))) for c in ids
-    ]
-    n = len(ids)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        flat = list(state.get) if state.exists else [0, None, None, 0.0, 0] * n
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            state.update(tuple(flat))
-            return
-        bars = pd.concat(chunks, ignore_index=True).sort_values(
-            ["timestamp", "event_id"], kind="stable"
-        )
-        outs = []
-        for i, cid in enumerate(ids):
-            st = tuple(flat[5 * i : 5 * i + 5])
-            out, st = _run_machine(key[0], bars, *params[i], st)
-            flat[5 * i : 5 * i + 5] = list(st)
-            pdf = pd.DataFrame(out)
-            pdf.insert(0, "config_id", cid)
-            outs.append(pdf)
-        state.update(tuple(flat))
-        yield pd.concat(outs, ignore_index=True)
-
-    return fn
-
-
 def streaming_mtm_sweep_blocked(
     signals: DataFrame, fee_tax: dict[str, tuple[float, float]]
 ) -> DataFrame:
-    """Strategy-grid MTM over a STREAM, config-BLOCKED form (the
-    streaming twin of run_mtm_param_sweep_blocked, r7): bars are NOT
-    exploded — each symbol is ONE state-store key whose state row
-    carries all C per-config 5-tuples, and the state fn runs the C
-    machines over a single copy of the micro-batch's bars. Shuffle
-    volume into the state operator is bars x 1 instead of bars x C,
-    and the state-store key count is #symbols instead of
-    #symbols x C (fewer, larger entries — same total bytes). Output
-    (and the SQL oracle) are identical to the exploded form;
-    value-parity is pytest-pinned like the batch pair."""
+    """Strategy-grid MTM over a STREAM: every (symbol, config) timeline
+    of the fee/tax grid, tagged with config_id. Bars are not replicated:
+    each symbol is ONE state-store key whose state row carries all C
+    per-config 5-tuples, and the state function runs the C machines
+    over a single copy of the micro-batch's bars. Shuffle volume into
+    the state operator is bars x 1 and the state-store key count is
+    #symbols. The streaming twin of run_mtm_param_sweep_blocked with the
+    whole grid in one block."""
+    ids = sorted(fee_tax)
     return signals.groupBy("symbol").applyInPandasWithState(
-        _make_sweep_state_fn_blocked(fee_tax),
+        _make_state_fn([fee_tax[c] for c in ids], ids),
         outputStructType=SWEEP_OUTPUT_SCHEMA,
-        stateStructType=_blocked_state_schema(len(fee_tax)),
+        stateStructType=_blocked_state_schema(len(ids)),
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
