@@ -14,10 +14,12 @@ Set $SPARK_GRAFT_BENCH_DETAIL=1 to also print the full map line
 (before the compact line, so the compact line stays last).
 
 The ``anchor_bookkeeper_500k`` field is the Spark-FREE driver-side
-numpy stress: it moves only when the HOST slows down, so
-``host_factor_vs_prev`` (this anchor / previous round's) separates
-host drift from plan regressions without manual normalization (the
-r6 and r13 cross-round reads both needed it by hand).
+numpy stress: for a fixed kernel it moves only when the HOST slows
+down, so ``host_factor_vs_prev`` (this anchor / previous round's)
+separates host drift from plan regressions without manual
+normalization (the r6 and r13 cross-round reads both needed it by
+hand). ``anchor_kernel`` names the kernel the anchor times; the factor
+is only taken against an artifact of the same kernel.
 
 Execution is forced with the noop sink so every column is computed
 (count() would let Catalyst prune the expensive windows away).
@@ -50,35 +52,33 @@ def _infer_round() -> int:
     return max(ns) + 1 if ns else 0
 
 
-def _prev_anchor() -> tuple[int, float] | None:
-    """(round, bookkeeper_500k_bars) from the newest prior artifact
-    that has one — parsed dict first, raw-tail regex as the fallback
-    (the r13 artifact only has the value inside the truncated tail)."""
+#: names the simulate_symbol kernel the ``bookkeeper_500k_bars`` anchor
+#: times. Change it whenever that kernel's code changes: its anchor then
+#: moves with the code, not the host, and no host factor is taken
+#: across the change.
+ANCHOR_KERNEL = "event-jump"
+
+
+def _prev_anchor(repo: str = _REPO) -> tuple[int, float] | None:
+    """(round, anchor_bookkeeper_500k) from the newest prior artifact
+    whose parsed compact line records the same ``anchor_kernel``.
+    Artifacts of another kernel, or of none (every artifact before the
+    tag), are skipped."""
     cands: list[tuple[int, str]] = []
-    for p in _glob.glob(os.path.join(_REPO, "BENCH_r*.json")):
+    for p in _glob.glob(os.path.join(repo, "BENCH_r*.json")):
         m = re.match(r"BENCH_r(\d+)\.json$", os.path.basename(p))
         if m:
             cands.append((int(m.group(1)), p))
     for n, p in sorted(cands, reverse=True):
-        # the whole per-candidate parse is guarded, not just the JSON
-        # load: a syntactically-valid artifact with the wrong shape
-        # (top-level list, "tail": null, ...) is equally skippable and
-        # must never kill the bench AFTER the timing loop ran
+        # the whole per-candidate parse is guarded: a corrupt or
+        # oddly-shaped artifact is skippable and must never kill the
+        # bench AFTER the timing loop ran
         try:
-            data = json.load(open(p))
-            parsed = data.get("parsed")
-            if isinstance(parsed, dict):
-                v = (parsed.get("queries") or {}).get(
-                    "bookkeeper_500k_bars"
-                ) or parsed.get("anchor_bookkeeper_500k")
-                if v:
-                    return n, float(v)
-            m2 = re.search(
-                r'"bookkeeper_500k_bars":\s*([0-9.]+)', data.get("tail") or ""
-            )
-            if m2:
-                return n, float(m2.group(1))
-        except Exception:  # noqa: BLE001 - a corrupt artifact is skippable
+            with open(p) as fh:
+                parsed = json.load(fh)["parsed"]
+            if parsed["anchor_kernel"] == ANCHOR_KERNEL and parsed["anchor_bookkeeper_500k"]:
+                return n, float(parsed["anchor_bookkeeper_500k"])
+        except Exception:  # noqa: BLE001
             continue
     return None
 
@@ -291,6 +291,26 @@ def _detail_slot(rnd: int, cpus: int, sf_tag: str = "") -> str:
     never lands in (or is read from) the headline slot."""
     c_tag = "" if cpus == DEFAULT_CPUS else f"_c{cpus}"
     return f"docs/BENCH_local_r{rnd:02d}{sf_tag}{c_tag}.json"
+
+
+def _write_detail(rel: str, out: dict, repo: str = _REPO) -> None:
+    """Write the full per-query map to the repo-relative ``rel``. A file
+    there that records another ``cpus`` belongs to another run (the
+    round-18 headline slot holds an 8-core round-17 run): it is kept,
+    and FileExistsError is raised instead."""
+    path = os.path.join(repo, rel)
+    try:
+        with open(path) as fh:
+            held = json.load(fh).get("cpus")
+    except (OSError, ValueError, AttributeError):
+        held = None
+    if held is not None and held != out["cpus"]:
+        raise FileExistsError(
+            f"{rel} records cpus={held}, not {out['cpus']}: not overwritten"
+        )
+    with open(path, "w") as fh:
+        json.dump(out, fh, indent=1, sort_keys=True)
+        fh.write("\n")
 
 
 def _vs_prev_detail(
@@ -930,6 +950,7 @@ def main() -> None:
     # stress vs the previous round's artifact
     anchor = timings.get("bookkeeper_500k_bars")
     out["anchor_bookkeeper_500k"] = anchor
+    out["anchor_kernel"] = ANCHOR_KERNEL
     prev = _prev_anchor()
     if anchor and prev:
         out["host_factor_prev_round"] = prev[0]
@@ -956,9 +977,7 @@ def main() -> None:
     sf_tag = "" if out["sf"] == 0.1 else f"_sf{sf}"
     detail_rel = _detail_slot(rnd, int(cpus), sf_tag)
     try:
-        with open(os.path.join(_REPO, detail_rel), "w") as fh:
-            json.dump(out, fh, indent=1, sort_keys=True)
-            fh.write("\n")
+        _write_detail(detail_rel, out)
     except OSError as exc:  # read-only checkout must not fail the bench
         errors["detail_file"] = f"{type(exc).__name__}: {exc}"[:200]
         detail_rel = None
@@ -988,6 +1007,7 @@ def main() -> None:
         "sweep_explode_secs",
         "sweep_explode_configs_per_sec",
         "anchor_bookkeeper_500k",
+        "anchor_kernel",
         "host_factor_prev_round",
         "host_factor_vs_prev",
         "cpus",

@@ -2,14 +2,26 @@
 compare against a previous detail file measured at the same core
 count. A file without ``cpus`` has an unknown core count and is
 skipped, not taken as the current one. A non-default core count
-writes and reads its own ``_c{cpus}`` detail slots."""
+writes and reads its own ``_c{cpus}`` detail slots, and a detail file
+that records another core count is never overwritten. The host factor
+is taken only against an artifact that timed the same anchor
+kernel."""
 
 from __future__ import annotations
 
 import json
 import os
 
-from bench import DEFAULT_CPUS, _detail_slot, _vs_prev_detail
+import pytest
+
+from bench import (
+    ANCHOR_KERNEL,
+    DEFAULT_CPUS,
+    _detail_slot,
+    _prev_anchor,
+    _vs_prev_detail,
+    _write_detail,
+)
 
 
 def _write(repo, rnd, payload, cpus=DEFAULT_CPUS):
@@ -58,3 +70,34 @@ def test_non_default_cores_walk_back_through_their_own_slots(tmp_path):
     # the default core count reads only the headline slots
     got = _vs_prev_detail(10, DEFAULT_CPUS, {"a": 1.0}, repo=repo)
     assert (got["prev_round"], got["geomean_speedup"]) == (9, 9.0)
+
+
+def _artifact(repo, rnd, parsed):
+    with open(os.path.join(repo, f"BENCH_r{rnd:02d}.json"), "w") as fh:
+        json.dump({"n": rnd, "parsed": parsed, "tail": json.dumps(parsed)}, fh)
+
+
+def test_host_factor_needs_the_same_anchor_kernel(tmp_path):
+    repo = str(tmp_path)
+    # every artifact before the tag timed the per-bar kernel: no factor
+    _artifact(repo, 17, {"anchor_bookkeeper_500k": 3.689,
+                         "queries": {"bookkeeper_500k_bars": 3.689}})
+    assert _prev_anchor(repo) is None
+    _artifact(repo, 18, {"anchor_bookkeeper_500k": 0.3, "anchor_kernel": ANCHOR_KERNEL})
+    _artifact(repo, 19, {"anchor_bookkeeper_500k": 0.1, "anchor_kernel": "other"})
+    _artifact(repo, 20, None)  # an unparsed artifact is skipped too
+    assert _prev_anchor(repo) == (18, 0.3)
+
+
+def test_detail_file_of_another_core_count_is_kept(tmp_path):
+    repo = str(tmp_path)
+    rel = _detail_slot(18, DEFAULT_CPUS)
+    _write(repo, 18, {"cpus": 8, "queries": {"a": 1.0}})
+    with pytest.raises(FileExistsError, match="cpus=8"):
+        _write_detail(rel, {"cpus": DEFAULT_CPUS, "queries": {"a": 2.0}}, repo=repo)
+    with open(os.path.join(repo, rel)) as fh:
+        assert json.load(fh)["cpus"] == 8
+    # the same core count (a rerun of the round) overwrites
+    _write_detail(rel, {"cpus": 8, "queries": {"a": 3.0}}, repo=repo)
+    with open(os.path.join(repo, rel)) as fh:
+        assert json.load(fh)["queries"] == {"a": 3.0}

@@ -202,16 +202,40 @@ def test_non_integer_minute_roi_key():
     """roi {0.5: 0.01, 0: 0.04}: the half-minute tier (30 s) activates
     after 30 s, so a +2% trade closes at the 40 s bar and not at the
     20 s bar. The engine reads RoiHelper's tier table, which pairs each
-    offset with its own value. PnlCalcConfig truncates minute keys to
-    int, so the table is set on the built config here."""
+    offset with its own value."""
     ts = np.array([0.0, 20.0, 40.0, 60.0])
     close = np.array([100.0, 102.0, 102.0, 102.0])
     buy, sell = signals(4, buys=[0])
-    cfg = default_cfg()
-    cfg.roi = {0.5: 0.01, 0: 0.04}
+    cfg = default_cfg(roi={0.5: 0.01, 0: 0.04})
     mtm, trades = simulate_symbol(ts, close, buy, sell, cfg)
     assert len(trades) == 1
     assert (trades[0].close_reason, trades[0].exit_ts) == ("ROI", 40.0)
+
+
+def test_roi_keys_keep_fractional_minutes_in_any_order():
+    """PnlCalcConfig keeps a fractional minute key as its float value
+    (it used to truncate 0.5 to 0, so the 0.5 tier overwrote or was
+    overwritten by tier 0, by dict order). Both orders build the same
+    roi and the same run; integral keys stay int; a negative key and a
+    missing key 0 are still errors."""
+    a = default_cfg(roi={0.5: 0.01, 0: 0.04})
+    b = default_cfg(roi={0: 0.04, 0.5: 0.01})
+    assert a.roi == b.roi == {0: 0.04, 0.5: 0.01}
+    assert [type(k) for k in sorted(a.roi)] == [int, float]
+    assert default_cfg(roi={0: 0.04, 30.0: 0.01}).roi == {0: 0.04, 30: 0.01}
+    ts = np.array([0.0, 20.0, 40.0, 60.0])
+    close = np.array([100.0, 102.0, 102.0, 102.0])
+    buy, sell = signals(4, buys=[0])
+    (mtm_a, tr_a), (mtm_b, tr_b) = (
+        simulate_symbol(ts, close, buy, sell, cfg) for cfg in (a, b)
+    )
+    assert mtm_a.tobytes() == mtm_b.tobytes()
+    assert [(t.exit_ts, t.close_reason) for t in tr_a] == [(40.0, "ROI")]
+    assert [(t.exit_ts, t.close_reason) for t in tr_b] == [(40.0, "ROI")]
+    with pytest.raises(ValueError, match="roi key must be >= 0"):
+        default_cfg(roi={0: 0.04, -0.5: 0.01})
+    with pytest.raises(ValueError, match="missing default roi"):
+        default_cfg(roi={0.5: 0.01})
 
 
 def test_roi_tiers_minimum_active():

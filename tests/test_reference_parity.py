@@ -238,7 +238,7 @@ def test_worst_price_pick_matches_reference_sort():
 def test_hypothesis_simulate_symbol_matches_reference():
     """Property-based head-to-head: hypothesis-generated price paths,
     signal patterns and config families through simulate_symbol (incl.
-    its vectorized idle/no-roi fast paths) vs the reference's pandas
+    the segments its advance block jumps over) vs the reference's pandas
     loop — per-bar mtm must agree to 1e-9. No Spark in the loop, so
     dozens of examples stay cheap.
 
@@ -259,8 +259,8 @@ def test_hypothesis_simulate_symbol_matches_reference():
 
     config_family = st.sampled_from(
         [
-            # (roi, stoploss, shorts, maxpos) — includes the families
-            # where the engine's vectorized stretch-skip is active
+            # (roi, stoploss, shorts, maxpos) — no roi/stop, roi only,
+            # stop only and both, so every advance-block term is live
             ({0: float("inf")}, float("-inf"), False, 1),
             ({0: float("inf")}, float("-inf"), True, 2),
             ({0: 0.03, 30: 0.01}, float("-inf"), False, 1),

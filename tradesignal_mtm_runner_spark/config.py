@@ -18,7 +18,7 @@ from dataclasses import dataclass, field
 
 @dataclass
 class PnlCalcConfig:
-    roi: dict[int, float] = field(default_factory=dict)
+    roi: dict[float, float] = field(default_factory=dict)
     stoploss: float = float("-inf")
     fixed_stake_unit_amount: float = 100.0
     enable_short_position: bool = False
@@ -37,14 +37,16 @@ class PnlCalcConfig:
             raise ValueError("stoploss must be negative")
         if not self.roi:
             raise ValueError("roi must be non-empty")
-        normalized: dict[int, float] = {}
+        normalized: dict[float, float] = {}
         for k, v in self.roi.items():
-            ik = int(k)
-            if ik < 0:
+            # integral minute keys stay int (so existing configs compare
+            # equal); a fractional key such as 0.5 (30 s) keeps its value
+            fk = float(k)
+            if not fk >= 0:  # also rejects NaN
                 raise ValueError("roi key must be >= 0")
             if not (isinstance(v, (int, float)) and v >= 0):
                 raise ValueError("roi value must be >= 0")
-            normalized[ik] = float(v)
+            normalized[int(fk) if fk.is_integer() else fk] = float(v)
         if 0 not in normalized:
             raise ValueError("missing default roi (key 0)")
         self.roi = normalized

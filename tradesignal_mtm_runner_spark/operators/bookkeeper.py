@@ -40,6 +40,14 @@ Per-bar semantics replicated exactly (order matters):
   5. laid_back_tax charged when no position remains open.
   6. mtm_history[t] = mtm(t) - fees(t)
 
+One advance rule: steps 1-6 run only on bars that can change state.
+From each such bar the loop jumps to the next one: the next signal
+bar, or the first bar where an open trade's ROI or stoploss condition
+(steps 2-3's own expressions, evaluated with numpy over the segment,
+trade by trade) holds. The bars in between only accrue mtm, filled
+per trade in the scalar loop's order (-tax when flat), so every value
+equals a bar-at-a-time run (pinned by tests/test_simulate_oracle.py).
+
 Known deviations from the reference (documented, intentional):
 
 1. Multi-close skip: the reference mutates its live-position list
@@ -174,10 +182,9 @@ def simulate_symbol(
         done.append(tr)
         return fee
 
-    # vectorized idle skip: while FLAT, bars without a signal are pure
-    # tax charges (mtm = -tax, no roi/sl checks possible), so whole
-    # flat stretches fill in one numpy slice instead of Python bars.
-    # sig_idx holds the bar indices that can change position state.
+    # the bars where a signal can change position state; the advance
+    # block at the end of the loop jumps between these and the bars
+    # where an open trade's ROI or stoploss condition holds
     sig_idx = np.flatnonzero((buy == 1) | (sell == 1))
 
     i = 0
@@ -269,32 +276,36 @@ def simulate_symbol(
             fees += tax
         # 6.
         mtm[i] -= fees
-        # advance; signal-free stretches vectorize when no per-bar
-        # close is possible there:
-        #   flat            -> every bar is just the tax charge
-        #   no roi/stoploss -> open trades only accrue mtm (closes
-        #      happen on signal bars only); accumulate per trade in
-        #      the SAME order as the scalar loop, so bit-identical
+        # advance to the next bar that can change state (the module
+        # docstring's one advance rule); the bars before it only accrue
+        # mtm, summed per trade in step 1's order so the values are
+        # bit-identical to running them one by one
+        k = np.searchsorted(sig_idx, i, side="right")
+        nxt = int(sig_idx[k]) if k < len(sig_idx) else n
         if not longs and not shorts:
-            k = np.searchsorted(sig_idx, i, side="right")
-            nxt = int(sig_idx[k]) if k < len(sig_idx) else n
-            if nxt > i + 1:
-                mtm[i + 1 : nxt] = -tax
-            i = nxt
-        elif not roi_live and stop == np.inf:
-            k = np.searchsorted(sig_idx, i, side="right")
-            nxt = int(sig_idx[k]) if k < len(sig_idx) else n
-            if nxt > i + 1:
-                seg = np.diff(close[i:nxt])
-                acc = np.zeros(nxt - i - 1, dtype=np.float64)
-                for tr in longs:
-                    acc += seg / tr.entry_price
-                for tr in shorts:
-                    acc -= seg / tr.entry_price
-                mtm[i + 1 : nxt] = acc
-            i = nxt
+            mtm[i + 1 : nxt] = -tax
         else:
-            i += 1
+            if roi_live or stop != np.inf:
+                for live, sgn in ((longs, 1.0), (shorts, -1.0)):
+                    for tr in live:
+                        # each hit shortens the segment the next trade scans
+                        pnl = sgn * (close[i + 1 : nxt] - tr.entry_price) / tr.entry_price
+                        hit = pnl < -stop
+                        if roi_live:
+                            age = ts_sec[i + 1 : nxt] - tr.entry_ts
+                            tier = np.searchsorted(roi_off, age, side="right") - 1
+                            hit |= (tier >= 0) & (pnl > roi_min[tier])
+                        first = np.flatnonzero(hit)
+                        if len(first):
+                            nxt = i + 1 + int(first[0])
+            seg = np.diff(close[i:nxt])
+            acc = np.zeros(len(seg), dtype=np.float64)
+            for tr in longs:
+                acc += seg / tr.entry_price
+            for tr in shorts:
+                acc -= seg / tr.entry_price
+            mtm[i + 1 : nxt] = acc
+        i = nxt
 
     return mtm, done + longs + shorts
 
