@@ -216,12 +216,11 @@ def test_roi_keys_keep_fractional_minutes_in_any_order():
     """PnlCalcConfig keeps a fractional minute key as its float value
     (it used to truncate 0.5 to 0, so the 0.5 tier overwrote or was
     overwritten by tier 0, by dict order). Both orders build the same
-    roi and the same run; integral keys stay int; a negative key and a
-    missing key 0 are still errors."""
+    roi and the same run; a negative key and a missing key 0 are still
+    errors."""
     a = default_cfg(roi={0.5: 0.01, 0: 0.04})
     b = default_cfg(roi={0: 0.04, 0.5: 0.01})
     assert a.roi == b.roi == {0: 0.04, 0.5: 0.01}
-    assert [type(k) for k in sorted(a.roi)] == [int, float]
     assert default_cfg(roi={0: 0.04, 30.0: 0.01}).roi == {0: 0.04, 30: 0.01}
     ts = np.array([0.0, 20.0, 40.0, 60.0])
     close = np.array([100.0, 102.0, 102.0, 102.0])

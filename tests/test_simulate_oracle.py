@@ -19,6 +19,8 @@ skips without it. This file needs neither.
 from __future__ import annotations
 
 import math
+import sys
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -30,6 +32,10 @@ from tradesignal_mtm_runner_spark.exceptions import (
 )
 from tradesignal_mtm_runner_spark.models import InventoryMode
 from tradesignal_mtm_runner_spark.operators.bookkeeper import simulate_symbol
+
+# perfbench's modules import each other by bare name
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
+from workloads import make_bars, sweep_configs  # noqa: E402
 
 _MODES = (InventoryMode.FIFO, InventoryMode.LIFO, InventoryMode.WORST_PRICE)
 
@@ -228,30 +234,18 @@ def test_strict_raises_what_the_scalar_loop_raises():
     assert raised > 500  # both outcomes are exercised
 
 
-def _sweep_grid() -> list[PnlCalcConfig]:
-    """The benchmark's 32-cell research grid: 4 ROI tiers x 4
-    stoplosses x 2 fees, shorts on, up to 3 positions per symbol."""
-    rois = [{0: 0.004}, {0: 0.008}, {0: 0.016, 60: 0.008}, {0: 0.03, 120: 0.012}]
-    stops = [-0.004, -0.008, -0.016, -0.03]
-    return [
-        PnlCalcConfig(roi=roi, stoploss=sl, fee_rate=fee,
-                      enable_short_position=True, max_position_per_symbol=3)
-        for roi in rois for sl in stops for fee in (0.0, 0.001)
-    ]
-
-
 def test_sweep_grid_universe_matches_the_scalar_loop():
-    """Every (symbol, config) run of the 32-config grid over 16
-    seeded symbols x 512 one-minute bars, signals on 1% of the bars
-    as in the benchmark's sweep, plus a denser 10% universe."""
-    rng = np.random.default_rng(401)
-    ts = 1.7e9 + 60.0 * np.arange(512)
-    grid = _sweep_grid()
+    """Every (symbol, config) run of the benchmark's 32-config grid
+    (perfbench's sweep_configs) over its bar generator's 16 seeded
+    symbols x 512 one-minute bars, signals on 1% of the bars as in the
+    benchmark's sweep, plus a denser 10% universe."""
+    grid = list(sweep_configs().values())
     for density in (0.01, 0.1):
-        for _ in range(16):
-            close = rng.uniform(20.0, 200.0) * np.exp(np.cumsum(rng.normal(0.0, 1e-3, 512)))
-            u = rng.random(512)
-            buy = (u < density / 2).astype(np.int64)
-            sell = ((u >= density / 2) & (u < density)).astype(np.int64)
+        bars = make_bars(np.random.default_rng(401), 16, 512, density)
+        for _, g in bars.groupby("symbol", sort=False):
+            ts = g["timestamp"].to_numpy().astype("datetime64[us]").astype(np.int64) / 1e6
+            close = g["close"].to_numpy(dtype=np.float64)
+            buy = g["buy"].to_numpy(dtype=np.int64)
+            sell = g["sell"].to_numpy(dtype=np.int64)
             for cfg in grid:
                 _assert_same((ts, close, buy, sell, cfg))

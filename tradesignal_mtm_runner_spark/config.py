@@ -39,14 +39,13 @@ class PnlCalcConfig:
             raise ValueError("roi must be non-empty")
         normalized: dict[float, float] = {}
         for k, v in self.roi.items():
-            # integral minute keys stay int (so existing configs compare
-            # equal); a fractional key such as 0.5 (30 s) keeps its value
+            # a fractional minute key such as 0.5 (30 s) keeps its value
             fk = float(k)
             if not fk >= 0:  # also rejects NaN
                 raise ValueError("roi key must be >= 0")
             if not (isinstance(v, (int, float)) and v >= 0):
                 raise ValueError("roi value must be >= 0")
-            normalized[int(fk) if fk.is_integer() else fk] = float(v)
+            normalized[fk] = float(v)
         if 0 not in normalized:
             raise ValueError("missing default roi (key 0)")
         self.roi = normalized

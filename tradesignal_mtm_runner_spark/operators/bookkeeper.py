@@ -47,6 +47,12 @@ bar, or the first bar where an open trade's ROI or stoploss condition
 trade by trade) holds. The bars in between only accrue mtm, filled
 per trade in the scalar loop's order (-tax when flat), so every value
 equals a bar-at-a-time run (pinned by tests/test_simulate_oracle.py).
+The scan pays for itself only on long signal-free stretches: when
+fewer than ``_SCAN_MIN_BARS`` of them lie ahead and a trade is open
+with ROI or stoploss live, the next bar is taken as the event bar.
+So sparse signals (about 1 bar in 100 in the research sweep) gain,
+and dense ones (about 4 bars in 10 for the events-derived signals)
+run bar by bar as before.
 
 Known deviations from the reference (documented, intentional):
 
@@ -82,6 +88,11 @@ from ..helper import RoiHelper
 from ..models import InventoryMode
 
 _LONG, _SHORT = 1, -1
+
+# shortest signal-free stretch worth a numpy scan for ROI/stoploss hits:
+# on shorter ones (dense signals) the scan's per-trade numpy calls cost
+# more than running the scalar steps on each bar
+_SCAN_MIN_BARS = 8
 
 TIMELINE_SCHEMA = T.StructType(
     [
@@ -169,6 +180,7 @@ def simulate_symbol(
     # active minimum roi threshold = roi_min[rightmost roi_off <= age]
     roi_off, roi_min = RoiHelper(config.roi).tier_table
     roi_live = config.has_roi
+    closes_live = roi_live or stop != np.inf
 
     longs: list[_Trade] = []
     shorts: list[_Trade] = []
@@ -185,7 +197,8 @@ def simulate_symbol(
     # the bars where a signal can change position state; the advance
     # block at the end of the loop jumps between these and the bars
     # where an open trade's ROI or stoploss condition holds
-    sig_idx = np.flatnonzero((buy == 1) | (sell == 1))
+    sig = np.flatnonzero((buy == 1) | (sell == 1)).tolist()
+    s = 0  # sig[s] is the first signal bar after the current bar
 
     i = 0
     while i < n:
@@ -280,12 +293,13 @@ def simulate_symbol(
         # docstring's one advance rule); the bars before it only accrue
         # mtm, summed per trade in step 1's order so the values are
         # bit-identical to running them one by one
-        k = np.searchsorted(sig_idx, i, side="right")
-        nxt = int(sig_idx[k]) if k < len(sig_idx) else n
-        if not longs and not shorts:
-            mtm[i + 1 : nxt] = -tax
-        else:
-            if roi_live or stop != np.inf:
+        while s < len(sig) and sig[s] <= i:
+            s += 1
+        nxt = sig[s] if s < len(sig) else n
+        if (longs or shorts) and closes_live:
+            if nxt - i - 1 < _SCAN_MIN_BARS:
+                nxt = i + 1
+            else:
                 for live, sgn in ((longs, 1.0), (shorts, -1.0)):
                     for tr in live:
                         # each hit shortens the segment the next trade scans
@@ -298,6 +312,9 @@ def simulate_symbol(
                         first = np.flatnonzero(hit)
                         if len(first):
                             nxt = i + 1 + int(first[0])
+        if nxt > i + 1 and not longs and not shorts:
+            mtm[i + 1 : nxt] = -tax
+        elif nxt > i + 1:
             seg = np.diff(close[i:nxt])
             acc = np.zeros(len(seg), dtype=np.float64)
             for tr in longs:
