@@ -295,9 +295,8 @@ def _detail_slot(rnd: int, cpus: int, sf_tag: str = "") -> str:
 
 def _write_detail(rel: str, out: dict, repo: str = _REPO) -> None:
     """Write the full per-query map to the repo-relative ``rel``. A file
-    there that records another ``cpus`` belongs to another run (the
-    round-18 headline slot holds an 8-core round-17 run): it is kept,
-    and FileExistsError is raised instead."""
+    there that records another ``cpus`` belongs to another run: it is
+    kept, and FileExistsError is raised instead."""
     path = os.path.join(repo, rel)
     try:
         with open(path) as fh:
@@ -374,14 +373,9 @@ def main() -> None:
 
     from tradesignal_mtm_runner_spark.session import get_spark
     from tradesignal_mtm_runner_spark.queries import (
-        EXTRA_QUERIES,
-        QUERIES,
+        ALL_QUERIES as registry,
         SWEEP_SCALE_CONFIGS,
     )
-
-    # same 20 headliners as round 1 (mtm_param_sweep moved to the
-    # pytest-only extras registry but stays benched for r-over-r deltas)
-    registry = {**QUERIES, **EXTRA_QUERIES}
 
     spark = get_spark(app_name="bench", master=f"local[{cpus}]",
                       shuffle_partitions=int(cpus))

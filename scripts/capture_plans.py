@@ -3,7 +3,7 @@ file per query: OUT_DIR/<query>_<tag>.txt.
 
 Run: python scripts/capture_plans.py OUT_DIR before|after QUERY [QUERY ...]
 
-Queries come from the merged registry (QUERIES + EXTRA_QUERIES) and run
+Queries come from the full registry (ALL_QUERIES) and run
 at $SPARK_GRAFT_SF_DIR (the same sf0.1 default as bench.py) on local[8].
 Capture "before" at the parent commit and "after" at the change, into
 a directory of your choosing, and diff the pairs.
@@ -24,10 +24,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from tradesignal_mtm_runner_spark.cache_registry import release_caches
-    from tradesignal_mtm_runner_spark.queries import EXTRA_QUERIES, QUERIES
+    from tradesignal_mtm_runner_spark.queries import ALL_QUERIES as registry
     from tradesignal_mtm_runner_spark.session import get_spark
 
-    registry = {**QUERIES, **EXTRA_QUERIES}
     unknown = [n for n in names if n not in registry]
     if unknown:
         sys.exit(f"unknown queries: {', '.join(unknown)}")

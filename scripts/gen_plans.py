@@ -137,10 +137,9 @@ def scorecard(plan: str, simple: str) -> str:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
-    from tradesignal_mtm_runner_spark.queries import EXTRA_QUERIES, QUERIES
+    from tradesignal_mtm_runner_spark.queries import ALL_QUERIES as registry
     from tradesignal_mtm_runner_spark.session import get_spark
 
-    registry = {**QUERIES, **EXTRA_QUERIES}
     spark = get_spark(app_name="gen_plans", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 

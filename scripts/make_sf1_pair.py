@@ -1,10 +1,12 @@
 """Assemble the same-session sf0.1/sf1 anchor pair artifact
-(docs/BENCH_sf1_r17.json — VERDICT r16 item 4) from two bench detail
-files produced back-to-back in one session window.
+docs/BENCH_sf1_r{ROUND}.json from two bench detail files produced
+back-to-back in one session window.
 
-Run AFTER:
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py  -> docs/BENCH_local_r17.json
-  SPARK_GRAFT_SF_DIR=/tmp/sf1             python bench.py  -> docs/BENCH_local_r17_sf1.json
+Run: python scripts/make_sf1_pair.py ROUND [note]
+
+after, in the same window:
+  SPARK_GRAFT_SF_DIR=<sf0.1 dir> python bench.py  -> docs/BENCH_local_r{ROUND}.json
+  SPARK_GRAFT_SF_DIR=<sf1 dir>   python bench.py  -> docs/BENCH_local_r{ROUND}_sf1.json
 """
 
 from __future__ import annotations
@@ -18,9 +20,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
-    note = sys.argv[1] if len(sys.argv) > 1 else ""
-    a = json.load(open(os.path.join(REPO, "docs/BENCH_local_r17.json")))
-    b = json.load(open(os.path.join(REPO, "docs/BENCH_local_r17_sf1.json")))
+    if len(sys.argv) < 2 or not sys.argv[1].isdigit():
+        sys.exit(__doc__)
+    rnd = int(sys.argv[1])
+    note = sys.argv[2] if len(sys.argv) > 2 else ""
+    a = json.load(open(os.path.join(REPO, f"docs/BENCH_local_r{rnd}.json")))
+    b = json.load(open(os.path.join(REPO, f"docs/BENCH_local_r{rnd}_sf1.json")))
     qa, qb = a["queries"], b["queries"]
     ratio = {
         k: round(qb[k] / qa[k], 2)
@@ -34,14 +39,14 @@ def main() -> None:
         2,
     )
     out = {
-        "round": 17,
+        "round": rnd,
         "note": note,
         "median_ratio_10x": med,
         "ratio_10x": ratio,
         "sf0_1": a,
         "sf1": b,
     }
-    dest = os.path.join(REPO, "docs/BENCH_sf1_r17.json")
+    dest = os.path.join(REPO, f"docs/BENCH_sf1_r{rnd}.json")
     with open(dest, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
         fh.write("\n")

@@ -24,10 +24,9 @@ def main() -> None:
     passes = int(os.environ.get("PROBE_PASSES", "3"))
 
     from tradesignal_mtm_runner_spark.cache_registry import release_caches
-    from tradesignal_mtm_runner_spark.queries import EXTRA_QUERIES, QUERIES
+    from tradesignal_mtm_runner_spark.queries import ALL_QUERIES as registry
     from tradesignal_mtm_runner_spark.session import get_spark
 
-    registry = {**QUERIES, **EXTRA_QUERIES}
     spark = get_spark(app_name="probe_keys", master=f"local[{cpus}]",
                       shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")

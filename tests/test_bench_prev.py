@@ -9,12 +9,15 @@ kernel."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 
 import pytest
 
 from bench import (
+    _REPO,
     ANCHOR_KERNEL,
     DEFAULT_CPUS,
     _detail_slot,
@@ -101,3 +104,24 @@ def test_detail_file_of_another_core_count_is_kept(tmp_path):
     _write_detail(rel, {"cpus": 8, "queries": {"a": 3.0}}, repo=repo)
     with open(os.path.join(repo, rel)) as fh:
         assert json.load(fh)["queries"] == {"a": 3.0}
+
+
+def test_round_18_headline_slot_is_free(tmp_path):
+    """The 8-core run that bench wrote as round 18 sits in its own
+    ``_c8`` slot: the next default-core bench (round 18) can write its
+    headline detail file, and an 8-core bench of round 19 still finds
+    the 8-core run to compare against."""
+    repo = str(tmp_path)
+    os.makedirs(os.path.join(repo, "docs"))
+    for path in glob.glob(os.path.join(_REPO, "docs", "BENCH_local_r*.json")):
+        shutil.copy(path, os.path.join(repo, "docs"))
+    _write_detail(
+        _detail_slot(18, DEFAULT_CPUS),
+        {"cpus": DEFAULT_CPUS, "queries": {"a": 1.0}},
+        repo=repo,
+    )
+    with open(os.path.join(repo, _detail_slot(18, 8))) as fh:
+        held = json.load(fh)
+    assert held["cpus"] == 8
+    got = _vs_prev_detail(19, 8, held["queries"], repo=repo)
+    assert (got["prev_round"], got["geomean_speedup"]) == (18, 1.0)

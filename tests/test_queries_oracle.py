@@ -7,17 +7,15 @@ import pytest
 
 import __spark_entry__ as entrymod
 from tests.conftest import SF_SMOKE, assert_frames_match
-from tradesignal_mtm_runner_spark.queries import EXTRA_ORACLES, EXTRA_QUERIES
-
-# driver-facing registry (first 50 are CORRECTNESS-checked) plus the
-# pytest-only extras — everything gets the same oracle treatment here
-QUERIES = {**entrymod.queries(), **EXTRA_QUERIES}
-ORACLES = {**entrymod.oracle_sql(), **EXTRA_ORACLES}
+from tradesignal_mtm_runner_spark.queries import (
+    ALL_ORACLES as ORACLES,
+    ALL_QUERIES as QUERIES,
+    DRIVER_WINDOW,
+)
 
 
 def test_driver_registry_fits_correctness_window():
-    # the driver evaluates only the first 50 queries() entries; every
-    # registered query must land inside that window (VERDICT r1 item 1)
+    # the driver evaluates only the first 50 queries() entries
     assert len(entrymod.queries()) <= 50
 
 
@@ -44,44 +42,22 @@ def test_entry_smoke(spark):
     assert "pnl" in df.columns
 
 
-def test_rotation_invariants():
-    """Each round's window rotation must keep the registries a clean
-    partition: exactly 50 driver slots, rotated keys on the declared
-    sides (latest rotation wins for keys touched twice), no key on
-    both sides, and every driver key oracled or declared no-oracle."""
-    from tradesignal_mtm_runner_spark import queries as q
-
-    assert len(q.QUERIES) == 50
-    assert set(q.QUERIES).isdisjoint(q.EXTRA_QUERIES)
-    rounds = [
-        (q.ROTATED_OUT_R5, q.ROTATED_IN_R5),
-        (q.ROTATED_OUT_R6, q.ROTATED_IN_R6),
-        (q.ROTATED_OUT_R7, q.ROTATED_IN_R7),
-        (q.ROTATED_OUT_R8, q.ROTATED_IN_R8),
-        (q.ROTATED_OUT_R9, q.ROTATED_IN_R9),
-        (q.ROTATED_OUT_R10, q.ROTATED_IN_R10),
-        (q.ROTATED_OUT_R11, q.ROTATED_IN_R11),
-        (q.ROTATED_OUT_R12, q.ROTATED_IN_R12),
-        (q.ROTATED_OUT_R13, q.ROTATED_IN_R13),
-        (q.ROTATED_OUT_R14, q.ROTATED_IN_R14),
-        (q.ROTATED_OUT_R15, q.ROTATED_IN_R15),
-        (q.ROTATED_OUT_R16, q.ROTATED_IN_R16),
-    ]
-    # replay the rotations generation by generation: a key's FINAL
-    # side is decided by the last round that touched it
-    side: dict[str, str] = {}
-    for outs, ins in rounds:
-        assert set(outs).isdisjoint(ins)
-        for k in outs:
-            side[k] = "extra"
-        for k in ins:
-            side[k] = "driver"
-    for k, s in side.items():
-        if s == "driver":
-            assert k in q.QUERIES, f"{k} rotated in but not in the window"
-        else:
-            assert k in q.EXTRA_QUERIES, f"{k} rotated out but still in window"
-    assert set(q.ALL_QUERIES) == set(q.QUERIES) | set(q.EXTRA_QUERIES)
+def test_driver_window():
+    """queries() is exactly DRIVER_WINDOW, in order, and oracle_sql()
+    is its oracled subset; only the two declared rows-only keys in the
+    window lack an oracle."""
+    keys = list(entrymod.queries())
+    assert keys == list(DRIVER_WINDOW)
+    assert len(set(keys)) == len(keys) == 50
+    assert set(keys) <= set(QUERIES)
+    assert {k for k in keys if k not in ORACLES} == {
+        "approx_table_profile",
+        "mtm_full_engine",
+    }
+    assert entrymod.oracle_sql() == {
+        k: ORACLES[k] for k in DRIVER_WINDOW if k in ORACLES
+    }
+    assert set(ORACLES) <= set(QUERIES)
 
 
 @pytest.mark.parametrize(

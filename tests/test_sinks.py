@@ -1,11 +1,12 @@
 """Sink round-trips: JSONL results in the reference's shape,
-partitioned timeline writes."""
+partitioned timeline writes, bucketed-table file layout."""
 
 from __future__ import annotations
 
 import glob
 import json
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -215,3 +216,40 @@ def test_ensure_table_absent_three_part_name(spark, tmp_path):
     assert not spark.catalog.tableExists("default.r12_orphan_t")
     sinks.ensure_table_absent(spark, "spark_catalog.default.r12_orphan_t")
     assert not os.path.exists(orphan)
+
+
+def test_write_bucketed_spreads_each_bucket_over_k_files(spark, tmp_path):
+    """With fewer buckets than cores, write_bucketed shuffles into
+    k x num_buckets partitions (k = ceil(cores / num_buckets)): every
+    file holds rows of exactly one bucket, and a bucket spreads over at
+    most k files (one per task) rather than one file per input task."""
+    n = 2
+    k = -(-spark.sparkContext.defaultParallelism // n)
+    assert k > 1
+    loc = tmp_path / "bucketk"
+    spark.sql(f"CREATE DATABASE bucketk LOCATION '{loc}'")
+    try:
+        df = spark.range(0, 4000, numPartitions=4 * k).select(
+            (F.col("id") % 101).alias("key"), "id"
+        )
+        sinks.write_bucketed(df, "bucketk.t", bucket_cols=["key"], num_buckets=n)
+        rows = (
+            spark.read.parquet(str(loc / "t"))
+            .select(
+                F.input_file_name().alias("f"),
+                F.expr(f"pmod(hash(key), {n})").alias("b"),
+            )
+            .groupBy("f")
+            .agg(F.collect_set("b").alias("bs"))
+            .collect()
+        )
+    finally:
+        spark.sql("DROP DATABASE bucketk CASCADE")
+    files_per_bucket: dict[int, int] = {}
+    for r in rows:
+        assert len(r.bs) == 1, f"{r.f} holds buckets {r.bs}"
+        # bucketed file names carry their bucket id: part-..._0000B.c000...
+        assert int(re.search(r"_(\d{5})\.c\d{3}", r.f).group(1)) == r.bs[0]
+        files_per_bucket[r.bs[0]] = files_per_bucket.get(r.bs[0], 0) + 1
+    assert set(files_per_bucket) == set(range(n))
+    assert max(files_per_bucket.values()) <= k

@@ -1,16 +1,14 @@
-"""Enums, constants and Spark result schemas.
+"""Enums and constants.
 
 Mirrors the reference's domain model (reference:
-src/tradesignal_mtm_runner/models.py) re-expressed as Spark schemas:
-trades and results are ROWS in distributed DataFrames, not Python
-objects — the 100 TB design keeps everything columnar.
+src/tradesignal_mtm_runner/models.py). Trades and results are ROWS in
+distributed DataFrames, not Python objects; their Spark schemas live
+with the engine that writes them (operators/bookkeeper.py).
 """
 
 from __future__ import annotations
 
 from enum import Enum
-
-from pyspark.sql import types as T
 
 MAX_NUMERIC_VALUE: float = 1e50
 MIN_NUMERIC_VALUE: float = -1e50
@@ -41,49 +39,3 @@ class InventoryMode(str, Enum):
     FIFO = "F"
     WORST_PRICE = "W"
 
-
-# --- Spark schemas ---------------------------------------------------------
-
-#: per-bar MTM timeline (reference Mtm_Result.pnl_timeline, models.py:221)
-MTM_TIMELINE_SCHEMA = T.StructType(
-    [
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("timestamp", T.TimestampType(), False),
-        T.StructField("close", T.DoubleType(), True),
-        T.StructField("buy_signal", T.IntegerType(), True),
-        T.StructField("sell_signal", T.IntegerType(), True),
-        T.StructField("mtm_ratio", T.DoubleType(), True),
-        T.StructField("pnl_ratio", T.DoubleType(), True),
-    ]
-)
-
-#: closed + outstanding trades (reference ProxyTrade, models.py:42)
-TRADES_SCHEMA = T.StructType(
-    [
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("direction", T.StringType(), False),
-        T.StructField("entry_datetime", T.TimestampType(), False),
-        T.StructField("entry_price", T.DoubleType(), False),
-        T.StructField("exit_datetime", T.TimestampType(), True),
-        T.StructField("exit_price", T.DoubleType(), True),
-        T.StructField("is_closed", T.BooleanType(), False),
-        T.StructField("close_reason", T.StringType(), True),
-        T.StructField("pnl_normalized", T.DoubleType(), True),
-    ]
-)
-
-#: per-symbol summary (reference Mtm_Result, models.py:203)
-MTM_RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("pnl", T.DoubleType(), True),
-        T.StructField("max_drawdown", T.DoubleType(), True),
-        T.StructField("sharpe_ratio", T.DoubleType(), True),
-        T.StructField("mkt_start_epoch", T.LongType(), True),
-        T.StructField("mkt_end_epoch", T.LongType(), True),
-        T.StructField("long_trades_closed", T.IntegerType(), True),
-        T.StructField("short_trades_closed", T.IntegerType(), True),
-        T.StructField("long_trades_outstanding", T.IntegerType(), True),
-        T.StructField("short_trades_outstanding", T.IntegerType(), True),
-    ]
-)

@@ -106,6 +106,7 @@ TIMELINE_SCHEMA = T.StructType(
     ]
 )
 
+#: closed + outstanding trades (reference ProxyTrade, models.py:42)
 TRADES_SCHEMA = T.StructType(
     [
         T.StructField("symbol", T.StringType(), False),

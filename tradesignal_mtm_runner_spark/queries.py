@@ -1,11 +1,13 @@
 """Driver-facing query registry: Spark implementation + DuckDB oracle.
 
-Each entry in ``QUERIES`` is a callable (spark, sf_dir) -> DataFrame;
-``ORACLES`` holds the equivalent DuckDB SQL over the same parquet
-tables (pre-registered views). Column names/types are kept in
-lock-step — floats are rounded to 9 decimals on BOTH sides so the
-order-insensitive value-hash comparison is robust to engine-level
-summation-order differences (measured <= 6e-14 on cumsums).
+Each entry in ``ALL_QUERIES`` is a callable (spark, sf_dir) ->
+DataFrame; ``ALL_ORACLES`` holds the equivalent DuckDB SQL over the
+same parquet tables (pre-registered views). ``QUERIES`` / ``ORACLES``
+are the driver's view: the keys of ``DRIVER_WINDOW``, in its order.
+Column names/types are kept in lock-step — floats are rounded to 9
+decimals on BOTH sides so the order-insensitive value-hash comparison
+is robust to engine-level summation-order differences (measured
+<= 6e-14 on cumsums).
 
 MTM query constants: fee_rate=0.001, laid_back_tax=0.0001 — chosen to
 exercise the fee/tax terms (reference trade_reward.py:144-166).
@@ -34,6 +36,26 @@ from .mtm_shared import (  # shared with queries_risk.py — see mtm_shared.py
 )
 from .functions.rounding import ROUND, r9
 from .operators.mtm import extract_trades, mtm_summary
+from .queries_analytics import ANALYTICS_ORACLES, ANALYTICS_QUERIES
+from .queries_pipeline import PIPELINE_ORACLES, PIPELINE_QUERIES
+from .queries_pipeline_extras import (
+    PIPELINE_EXTRAS_ORACLES,
+    PIPELINE_EXTRAS_QUERIES,
+)
+from .queries_r8 import R8_ORACLES, R8_QUERIES
+from .queries_r9 import R9_ORACLES, R9_QUERIES
+from .queries_r10 import R10_ORACLES, R10_QUERIES
+from .queries_r10b import R10B_ORACLES, R10B_QUERIES
+from .queries_r11 import R11_ORACLES, R11_QUERIES
+from .queries_r11b import R11B_ORACLES, R11B_QUERIES
+from .queries_r12 import R12_ORACLES, R12_QUERIES
+from .queries_r13 import R13_ORACLES, R13_QUERIES
+from .queries_r14 import R14_ORACLES, R14_QUERIES
+from .queries_r14b import R14B_ORACLES, R14B_QUERIES
+from .queries_r15 import R15_ORACLES, R15_QUERIES
+from .queries_r16 import R16_ORACLES, R16_QUERIES
+from .queries_r17 import R17_ORACLES, R17_QUERIES
+from .queries_risk import RISK_ORACLES, RISK_QUERIES
 
 
 # --------------------------------------------------------------------------
@@ -234,7 +256,7 @@ summary AS (
   FROM dd GROUP BY symbol
 )"""
 
-ORACLES: dict[str, str] = {
+MTM_ORACLES: dict[str, str] = {
     "price_movement": f"""
 WITH {_SIGNALS_SQL}
 SELECT symbol, timestamp, event_id, close,
@@ -654,7 +676,7 @@ GROUP BY 1, user_id, event_type
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+MTM_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "mtm_streaming": q_mtm_streaming,
     "events_stream_window": q_events_stream_window,
     "price_movement": q_price_movement,
@@ -675,609 +697,68 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 # streaming replay == batch timeline, so the oracle is shared
-ORACLES["mtm_streaming"] = ORACLES["mtm_timeline"]
-ORACLES["mtm_sweep_stream"] = MTM_SWEEP_STREAM_SQL
-ORACLES["events_stream_window"] = EVENTS_STREAM_WINDOW_SQL
-ORACLES["drawdown_stats"] = DRAWDOWN_STATS_SQL
-ORACLES["resample_ohlc"] = RESAMPLE_OHLC_SQL
+MTM_ORACLES["mtm_streaming"] = MTM_ORACLES["mtm_timeline"]
+MTM_ORACLES["mtm_sweep_stream"] = MTM_SWEEP_STREAM_SQL
+MTM_ORACLES["events_stream_window"] = EVENTS_STREAM_WINDOW_SQL
+MTM_ORACLES["drawdown_stats"] = DRAWDOWN_STATS_SQL
+MTM_ORACLES["resample_ohlc"] = RESAMPLE_OHLC_SQL
 
-# analytics block (B) — see queries_analytics.py
-from .queries_analytics import ANALYTICS_ORACLES, ANALYTICS_QUERIES  # noqa: E402
-
-QUERIES.update(ANALYTICS_QUERIES)
-ORACLES.update(ANALYTICS_ORACLES)
-
-# LLM-pipeline block (C) — see queries_pipeline.py
-from .queries_pipeline import PIPELINE_ORACLES, PIPELINE_QUERIES  # noqa: E402
-
-QUERIES.update(PIPELINE_QUERIES)
-ORACLES.update(PIPELINE_ORACLES)
+# Every registered query, whichever side of the driver window it sits
+# on; tests/test_queries_oracle.py checks each one against its oracle.
+ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ALL_ORACLES: dict[str, str] = {}
+for _queries, _oracles in (
+    (MTM_QUERIES, MTM_ORACLES),
+    (ANALYTICS_QUERIES, ANALYTICS_ORACLES),
+    (PIPELINE_QUERIES, PIPELINE_ORACLES),
+    (PIPELINE_EXTRAS_QUERIES, PIPELINE_EXTRAS_ORACLES),
+    (RISK_QUERIES, RISK_ORACLES),
+    (R8_QUERIES, R8_ORACLES),
+    (R9_QUERIES, R9_ORACLES),
+    (R10_QUERIES, R10_ORACLES),
+    (R10B_QUERIES, R10B_ORACLES),
+    (R11_QUERIES, R11_ORACLES),
+    (R11B_QUERIES, R11B_ORACLES),
+    (R12_QUERIES, R12_ORACLES),
+    (R13_QUERIES, R13_ORACLES),
+    (R14_QUERIES, R14_ORACLES),
+    (R14B_QUERIES, R14B_ORACLES),
+    (R15_QUERIES, R15_ORACLES),
+    (R16_QUERIES, R16_ORACLES),
+    (R17_QUERIES, R17_ORACLES),
+):
+    ALL_QUERIES.update(_queries)
+    ALL_ORACLES.update(_oracles)
 
 # The driver's CORRECTNESS harness evaluates only the first 50 entries
-# of queries(); every SURVEY §2 operator must sit inside that window.
-# These variants stay fully oracle-tested in pytest
-# (tests/test_queries_oracle.py runs QUERIES ∪ EXTRA_QUERIES) but are
-# excluded from the driver registry:
+# of queries(), in this order; pytest verifies every key the same way.
+# Rotating a key in or out of the driver's view means editing this
+# tuple. Some keys stay off-window by design:
 #   - pnl_per_symbol / max_drawdown / sharpe_ratio: the same metrics
 #     are driver-checked as columns of mtm_summary (SURVEY A3-A5);
-#   - simhash: the signature computation is driver-checked inside
-#     simhash_pairs and dedup_connected (SURVEY C10/C17);
-#   - mtm_full_trades / mtm_param_sweep: no SQL oracle exists (full
-#     bookkeeper feedback loop); both are parity-tested head-to-head
-#     against the reference engine in tests/test_reference_parity.py.
-EXTRA_KEYS = (
-    "pnl_per_symbol",
-    "max_drawdown",
-    "sharpe_ratio",
-    "mtm_full_trades",
-    "mtm_param_sweep",
-    "mtm_sweep_scale",
-    "mtm_sweep_stream",  # r6: fully oracled; r7 rotation candidate
-    "simhash",
-)
-EXTRA_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    k: QUERIES.pop(k) for k in EXTRA_KEYS
-}
-EXTRA_ORACLES: dict[str, str] = {
-    k: ORACLES.pop(k) for k in EXTRA_KEYS if k in ORACLES
-}
-
-# C20+ training-data-pipeline operators (SURVEY §2 C-block tail):
-# pytest-extras for the same reason — the 50 driver slots are all
-# taken by §2 core keys. See queries_pipeline_extras.py.
-from .queries_pipeline_extras import (  # noqa: E402
-    PIPELINE_EXTRA_ORACLES,
-    PIPELINE_EXTRA_QUERIES,
-)
-
-EXTRA_QUERIES.update(PIPELINE_EXTRA_QUERIES)
-EXTRA_ORACLES.update(PIPELINE_EXTRA_ORACLES)
-
-# B22+ TPC-H classics (same driver-window reason)
-from .queries_analytics import (  # noqa: E402
-    ANALYTICS_EXTRA_ORACLES,
-    ANALYTICS_EXTRA_QUERIES,
-)
-
-EXTRA_QUERIES.update(ANALYTICS_EXTRA_QUERIES)
-EXTRA_ORACLES.update(ANALYTICS_EXTRA_ORACLES)
-
-# A15-A17 risk/portfolio analytics (same driver-window reason)
-from .queries_risk import RISK_EXTRA_ORACLES, RISK_EXTRA_QUERIES  # noqa: E402
-
-EXTRA_QUERIES.update(RISK_EXTRA_QUERIES)
-EXTRA_ORACLES.update(RISK_EXTRA_ORACLES)
-
-# round-8 surface: SCD2 history, table profiling, distributed PCA,
-# BM25 / hybrid retrieval, boilerplate stripping (same reason)
-from .queries_r8 import R8_ORACLES, R8_QUERIES  # noqa: E402
-from .queries_r9 import R9_ORACLES, R9_QUERIES  # noqa: E402
-
-EXTRA_QUERIES.update(R8_QUERIES)
-EXTRA_ORACLES.update(R8_ORACLES)
-EXTRA_QUERIES.update(R9_QUERIES)
-EXTRA_ORACLES.update(R9_ORACLES)
-
-# round-10 surface: incremental CC dedup admission (standing-index
-# probe made oracle-checkable; same reason)
-from .queries_r10 import R10_ORACLES, R10_QUERIES  # noqa: E402
-
-EXTRA_QUERIES.update(R10_QUERIES)
-EXTRA_ORACLES.update(R10_ORACLES)
-
-# round-10 second batch: market-basket mining, co-purchase PageRank,
-# Markov transitions, median/MAD anomaly screen, Deequ-style DQ audit
-from .queries_r10b import R10B_ORACLES, R10B_QUERIES  # noqa: E402
-
-EXTRA_QUERIES.update(R10B_QUERIES)
-EXTRA_ORACLES.update(R10B_ORACLES)
-
-# round-11 batch: the five remaining TPC-H heads, adapted to the
-# testdata schema (q2/q11/q12/q16/q20) — completes the 22-query suite
-from .queries_r11 import R11_ORACLES, R11_QUERIES  # noqa: E402
-
-EXTRA_QUERIES.update(R11_QUERIES)
-EXTRA_ORACLES.update(R11_ORACLES)
-
-# round-11 streaming batch: SCD2 maintenance under foreachBatch MERGE,
-# FULL OUTER watermarked stream-stream join with two-sided tail flush
-from .queries_r11b import R11B_ORACLES, R11B_QUERIES  # noqa: E402
-
-EXTRA_QUERIES.update(R11B_QUERIES)
-EXTRA_ORACLES.update(R11B_ORACLES)
-
-# round-12 batch: loader-ready shard packing (C64 shuffle ∘ C24 pack)
-from .queries_r12 import R12_ORACLES, R12_QUERIES  # noqa: E402
-
-EXTRA_QUERIES.update(R12_QUERIES)
-EXTRA_ORACLES.update(R12_ORACLES)
-
-# round-13 batch: streaming shard packing (the C66 admission twin)
-from .queries_r13 import R13_ORACLES, R13_QUERIES  # noqa: E402
-
-EXTRA_QUERIES.update(R13_QUERIES)
-EXTRA_ORACLES.update(R13_ORACLES)
-
-# round-14 batch: k-core decomposition over the co-purchase graph
-from .queries_r14 import R14_ORACLES, R14_QUERIES  # noqa: E402
-
-EXTRA_QUERIES.update(R14_QUERIES)
-EXTRA_ORACLES.update(R14_ORACLES)
-
-# round-14 second batch: the graph family completed — LPA communities,
-# local clustering coefficients, Adamic-Adar link prediction
-from .queries_r14b import R14B_ORACLES, R14B_QUERIES  # noqa: E402
-
-EXTRA_QUERIES.update(R14B_QUERIES)
-EXTRA_ORACLES.update(R14B_ORACLES)
-
-# round-15 batch: co-purchase connected components, the LPA-communities
-# stream twin, and the degree-distribution rollup
-from .queries_r15 import R15_ORACLES, R15_QUERIES  # noqa: E402
-
-EXTRA_QUERIES.update(R15_QUERIES)
-EXTRA_ORACLES.update(R15_ORACLES)
-
-# round-16 batch: incremental components maintenance (contraction
-# refresh) + the corpus novelty-saturation curve
-from .queries_r16 import R16_ORACLES, R16_QUERIES  # noqa: E402
-
-EXTRA_QUERIES.update(R16_QUERIES)
-EXTRA_ORACLES.update(R16_ORACLES)
-
-# round-17 batch: k-truss backbone (the cohesive-subgraph family's
-# triangle-cohesion classic), first-class ANN recall eval, and the
-# two-window mean-shift changepoint screen
-from .queries_r17 import R17_ORACLES, R17_QUERIES  # noqa: E402
-
-EXTRA_QUERIES.update(R17_QUERIES)
-EXTRA_ORACLES.update(R17_ORACLES)
-
-# --- round-5 driver-window rotation (VERDICT r4, next-round item 1) ---------
-# The driver CORRECTNESS harness only ever sees the first 50 queries();
-# everything else is verified by the identical DuckDB harness in pytest.
-# To convert "pytest says green" into "driver says green" for queries that
-# have never crossed the driver's independent window, long-green
-# low-information slots (row-local projections, simple aggregates whose
-# shapes are also exercised by other window keys) rotate OUT to the pytest
-# registry and never-driver-verified keys rotate IN.  Total pytest coverage
-# is unchanged: tests/test_queries_oracle.py runs QUERIES ∪ EXTRA_QUERIES.
-ROTATED_OUT_R5 = (
-    "price_movement",
-    "value_histogram",
-    "events_pivot",
-    "distinct_users_daily",
-    "token_count",
-    "doc_fingerprint",
-    "text_stats",
-    "lang_id",
-    "q6_revenue_delta",
-    "token_histogram",
-)
-ROTATED_IN_R5 = (
-    "q8_market_share",
-    "q21_late_suppliers",
-    "events_json_extract",
-    "dedup_incremental",
-    "multimodal_pixels",
-    "risk_metrics",
-    "trade_stats",
-    "dedup_substring",
-    "bpe_apply",
-    "dedup_semantic",
-)
-# --- round-6 rotation (VERDICT r5, next-round item 2) -----------------------
-# The 13 r5-new keys had never crossed the driver's independent oracle.
-# Ten oracled ones rotate IN (mtm_sweep_scale stays pytest — rows-only by
-# design; embedding_outliers and multimodal_stream_decode queue for r7);
-# ten long-green slots whose shapes are also covered by remaining window
-# keys rotate OUT to the pytest registry.
-ROTATED_OUT_R6 = (
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q10_returned_items",
-    "q18_large_orders",
-    "rolling_revenue_7d",
-    "revenue_rollup",
-    "events_funnel",
-    "dedup_exact",
-    "ann_lsh_buckets",
-)
-ROTATED_IN_R6 = (
-    "events_json_stream",
+#   - simhash: driver-checked inside simhash_pairs and dedup_connected;
+#   - mtm_full_trades / mtm_param_sweep / mtm_sweep_scale: no SQL
+#     oracle (full bookkeeper feedback loop); parity-tested against
+#     the reference and single-config runs instead.
+# Two window keys are rows-only by design: mtm_full_engine (same loop)
+# and approx_table_profile (its tolerance-vs-exact pin is the gate).
+DRIVER_WINDOW = (
+    "mtm_streaming",
+    "events_stream_window",
+    "mtm_timeline",
+    "mtm_summary",
+    "mtm_full_engine",
+    "drawdown_stats",
+    "dedup_connected",
     "ann_pq_rerank",
     "dedup_incremental_near",
-    "multimodal_audio",
-    "multimodal_gif",
-    "multimodal_resize",
-    "multimodal_frames",
-    "doc_feature_hashing",
-    "corpus_mixture_weights",
-    "quality_classifier_scores",
-)
-# --- round-7 rotation (VERDICT r6, next-round item 2) -----------------------
-# Twelve never-driver-verified keys rotate IN: the four r6-new operators,
-# the streaming family (stream_join/session/enrich + mtm_sweep_stream),
-# and long-standing extras (tech_indicators, contamination_check,
-# corpus_filter_pipeline — extended this round, embedding_outliers).
-# Twelve long-green slots rotate OUT, including the two rows-only
-# approx_* sketches (their driver check was rows-only anyway; their
-# tolerance-vs-exact pytest checks are the real gate) — so the window
-# trades two no_oracle slots for two fully-oracled ones.
-ROTATED_OUT_R7 = (
-    "resample_ohlc",
-    "top_customers_window",
-    "doc_chunks",
-    "tf_idf_top_terms",
-    "ann_cosine_topk",
-    "q5_local_supplier",
-    "text_quality",
-    "trades_extract",
-    "buy_hold_mtm",
-    "dedup_ngram_jaccard",
-    "approx_price_quantiles",
-    "approx_distinct_users_daily",
-)
-ROTATED_IN_R7 = (
-    "mtm_sweep_stream",
-    "doc_repetition",
-    "doc_winnowing",
-    "quality_thresholds_by_lang",
-    "tech_indicators",
-    "stream_join",
-    "stream_session",
-    "stream_enrich",
-    "corpus_filter_pipeline",
-    "contamination_check",
-    "embedding_outliers",
-    "symbol_correlation",
-)
-# --- round-8 rotation (VERDICT r7, next-round item 2) -----------------------
-# Twelve more keys from the never-driver-verified queue (SURVEY §2
-# preamble, oldest first) rotate IN: the round-2 training-pipeline
-# extras and the sketch/probabilistic family. mtm_sweep_stream STAYS
-# in the window so its r7 negative-zero hash fix is driver-verified.
-# Twelve long-green slots rotate OUT: the r1 cohort whose shapes are
-# covered by remaining keys (events_sessionize by stream_session,
-# events_json_extract by events_json_stream, bpe_apply by the
-# incoming bpe_train, multimodal_decode by the five pixel-level
-# codec keys) and the r5 cohort green since first exposure.
-ROTATED_OUT_R8 = (
-    "events_sessionize",
-    "asof_join",
-    "skew_join_salted",
-    "events_error_burst",
-    "price_quantiles",
-    "q8_market_share",
-    "q21_late_suppliers",
-    "events_json_extract",
-    "risk_metrics",
-    "trade_stats",
-    "bpe_apply",
-    "multimodal_decode",
-)
-ROTATED_IN_R8 = (
-    "stream_dedup",
-    "train_val_split",
-    "pii_scrub",
-    "embedding_quantize",
-    "sequence_pack",
-    "stratified_sample",
-    "ngram_counts",
-    "bpe_train",
-    "ann_pq_topk",
-    "token_cms_topk",
-    "doc_perplexity",
-    "bloom_prefilter",
-)
-# --- round-9 rotation (VERDICT r8, next-round item 4) -----------------------
-# The never-driver-verified queue heads (SURVEY §2 preamble, oldest
-# first) rotate IN: the remaining TPC-H analytics cohort, the
-# streaming media decode, and the image-dedup pair family. The entire
-# r7 cohort rotates OUT — every one of its 12 keys has been
-# driver-green for two consecutive rounds (r7 first exposure, r8
-# confirm), including mtm_sweep_stream whose r7 hash fix is now
-# driver-verified; their shapes stay covered in-window (streaming by
-# stream_dedup/mtm_streaming/events_stream_window/events_json_stream,
-# doc quality/dedup by the C-family keys that remain).
-ROTATED_OUT_R9 = (
-    "mtm_sweep_stream",
-    "doc_repetition",
-    "doc_winnowing",
-    "quality_thresholds_by_lang",
-    "tech_indicators",
-    "stream_join",
-    "stream_session",
-    "stream_enrich",
-    "corpus_filter_pipeline",
-    "contamination_check",
-    "embedding_outliers",
-    "symbol_correlation",
-)
-ROTATED_IN_R9 = (
-    "upsert_latest",
-    "q7_volume_shipping",
-    "q13_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_pushdown",
-    "q22_idle_customers",
-    "q9_profit_by_nation",
-    "multimodal_stream_decode",
-    "image_dhash",
-    "image_dhash_pairs",
-)
-# --- round-10 rotation (VERDICT r9, next-round item 1) ----------------------
-# Queue heads in, oldest first — this batch finally exposes the r7
-# streaming family (CDC upsert via foreachBatch, watermarked outer
-# join, dynamic session windows) plus the audio/image dedup extras
-# and the r8 profiling pair to the driver's independent harness. The
-# whole r8 cohort rotates OUT: every one of its 12 keys has been
-# driver-green for two consecutive rounds (r8 first exposure, r9
-# confirm); their shapes stay covered in-window (sketches by
-# approx-profile-family pytest pins, the training extras by
-# classifier_train_lr rotating in).
-ROTATED_OUT_R10 = (
-    "stream_dedup",
-    "train_val_split",
-    "pii_scrub",
-    "embedding_quantize",
-    "sequence_pack",
-    "stratified_sample",
-    "ngram_counts",
-    "bpe_train",
-    "ann_pq_topk",
-    "token_cms_topk",
-    "doc_perplexity",
-    "bloom_prefilter",
-)
-ROTATED_IN_R10 = (
     "image_dedup_connected",
-    "audio_fingerprint",
-    "audio_fp_pairs",
-    "events_variant",
-    "stream_upsert",
-    "stream_join_outer",
-    "stream_session_dynamic",
-    "rolling_beta",
-    "resample_ffill",
-    "classifier_train_lr",
-    "scd2_history",
-    "table_profile",
-)
-# --- round-11 rotation (VERDICT r9 item 8: the endgame batch) ---------------
-# ALL 22 remaining never-driver-verified oracled keys rotate IN at
-# once, clearing the queue — after this round every oracled key in the
-# registry has crossed the driver's independent window at least once.
-# (approx_table_profile is rows-only by design — its tolerance-vs-exact
-# pytest pin is the real gate — so the window carries two declared
-# no_oracle slots this round.) Rotate-outs, per the published plan:
-# the whole r9 cohort (driver-green r9+r10), the four remaining r5
-# cohort keys (green since r5), and the six longest-green r6 keys
-# whose shapes stay covered — media by the r10-in image/audio dedup
-# keys, incremental dedup by the incoming CC family, streaming by the
-# five streaming keys still in-window plus the two incoming streaming
-# dedup keys.
-ROTATED_OUT_R11 = (
-    # r9 cohort, two rounds green
-    "upsert_latest",
-    "q7_volume_shipping",
-    "q13_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_pushdown",
-    "q22_idle_customers",
-    "q9_profit_by_nation",
-    "multimodal_stream_decode",
-    "image_dhash",
-    "image_dhash_pairs",
-    # r5 cohort, six rounds green
-    "dedup_incremental",
-    "multimodal_pixels",
-    "dedup_substring",
-    "dedup_semantic",
-    # r6 cohort, five rounds green
-    "multimodal_audio",
-    "multimodal_gif",
-    "multimodal_resize",
-    "multimodal_frames",
-    "events_json_stream",
-    "corpus_mixture_weights",
-)
-ROTATED_IN_R11 = (
-    # r8 registrants
     "embedding_pca_power",
     "bm25_topk",
     "hybrid_search_rrf",
-    "boilerplate_segments",
-    # r9 registrants
     "approx_table_profile",
     "hybrid_bm25_pq_rrf",
-    "doc_char_entropy",
-    "token_zipf_fit",
-    "dedup_keep_best",
-    "retention_cohort",
-    "stream_topk_trending",
-    # r10 registrants
-    "dedup_cc_probe",
-    "dedup_cc_refresh",
     "dedup_incremental_near_stream",
-    "embedding_pca_topk",
-    "text_normalize",
-    "dedup_cc_probe_stream",
-    "basket_pairs",
-    "copurchase_pagerank",
-    "user_transition_matrix",
-    "events_anomaly_mad",
-    "dq_audit",
-)
-# R12: the 11 r11-new keys PLUS r12's own corpus_pack_shards take
-# their driver exposure — the never-driver-verified queue is empty
-# again. Rotate-outs follow VERDICT r11 item 1: the three CC live
-# chains go out first (~58 s of the sf0.01 sim window — the heaviest
-# keys in it, and each has a standing-index probe twin still pinned
-# in pytest), then nine two-round-green r10-cohort keys, preferring
-# the heavy streaming ones whose SHAPES the incoming keys supersede
-# (scd2_stream covers scd2_history + the upsert-sink machinery;
-# stream_join_full_outer covers stream_join_outer's sentinel-flush
-# recipe; audio_fp_pairs' banded-pair shape stays covered by the
-# in-window audio_fingerprint + the image_dhash_pairs pytest twin).
-ROTATED_OUT_R12 = (
-    # r11 cohort CC live chains, driver-green r11
-    "dedup_cc_probe",
-    "dedup_cc_refresh",
-    "dedup_cc_probe_stream",
-    # r10 cohort, driver-green r10+r11
-    "stream_upsert",
-    "stream_join_outer",
-    "stream_session_dynamic",
-    "scd2_history",
-    "table_profile",
-    "classifier_train_lr",
-    "rolling_beta",
-    "resample_ffill",
-    "audio_fp_pairs",
-)
-ROTATED_IN_R12 = (
-    # r11 registrants — the entire never-driver-verified queue
-    "q2_min_cost_supplier",
-    "q11_important_parts",
-    "q12_late_priority",
-    "q16_supplier_counts",
-    "q20_excess_suppliers",
-    "corpus_shuffle_shards",
-    "corpus_weighted_sample",
-    "scd2_stream",
-    "stream_join_full_outer",
-    "user_rfm_segments",
-    "events_seasonality",
-    # r12's own registrant takes its exposure the same round (the r11
-    # endgame precedent) — integer/string outputs only, hash-safe by
-    # construction; the never-driver-verified queue is EMPTY again
-    "corpus_pack_shards",
-)
-ROTATED_OUT_R13 = (
-    # two-round-green r11-rotation cohort (driver-green r11 + r12);
-    # every rotated-out shape keeps an in-window or pytest twin:
-    # pca_topk → embedding_pca_power (in-window) + pytest oracle,
-    # keep_best/pagerank/basket → the simhash/CC and agg families
-    # still in-window + their own pytest oracles
-    "embedding_pca_topk",
-    "copurchase_pagerank",
-    "dedup_keep_best",
-    "basket_pairs",
-    "token_zipf_fit",
-    "doc_char_entropy",
-    "boilerplate_segments",
-    "retention_cohort",
-    "user_transition_matrix",
-    "events_anomaly_mad",
-    "dq_audit",
-)
-ROTATED_IN_R13 = (
-    # second-pass refresh (VERDICT r12 item 4): the r5–r8 cohort whose
-    # only driver exposure is now ≥4 rounds old
-    "contamination_check",
-    "corpus_filter_pipeline",
-    "dedup_substring",
-    "dedup_semantic",
-    "tech_indicators",
-    "stream_join",
-    "stream_session",
-    "mtm_sweep_stream",
-    # r13's own registrants take their exposure the same round (the
-    # standing pattern; integer/string/rounded-double outputs only)
-    "corpus_pack_shards_stream",
-    "multimodal_mpeg1",
-    "copurchase_triangles",
-)
-ROTATED_OUT_R14 = (
-    # two-round-green r12-rotation cohort (driver-green r12 + r13);
-    # every rotated-out shape keeps an in-window or pytest twin: the
-    # TPC-H heads keep q1/q3/q5-style siblings plus their own pytest
-    # oracles, the corpus shuffle/sample/pack family keeps
-    # corpus_pack_shards_stream (in-window r13–r14) which hash-matches
-    # the batch C66 oracle, and the streaming pair keeps scd2's + full
-    # outer's pytest equality pins
-    "q2_min_cost_supplier",
-    "q11_important_parts",
-    "q12_late_priority",
-    "q16_supplier_counts",
-    "q20_excess_suppliers",
-    "corpus_shuffle_shards",
-    "corpus_weighted_sample",
-    "scd2_stream",
-    "stream_join_full_outer",
-    "user_rfm_segments",
-    "events_seasonality",
-    "corpus_pack_shards",
-    # three-round-green r11-rotation holdover (driver-green r11-r13),
-    # making the slot for the r14 registrant below
-    "doc_feature_hashing",
-)
-ROTATED_IN_R14 = (
-    # second-pass refresh, r9 cohort (SURVEY §7 round-14 plan): last
-    # driver exposure r10, ≥4 rounds old
-    "upsert_latest",
-    "q7_volume_shipping",
-    "q9_profit_by_nation",
-    "q13_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_pushdown",
-    "q22_idle_customers",
-    "multimodal_stream_decode",
-    "image_dhash",
-    "image_dhash_pairs",
-    # r14's own registrant takes its exposure the same round (the
-    # standing pattern; BIGINT outputs only — hash-safe by
-    # construction)
-    "copurchase_kcore",
-)
-ROTATED_OUT_R15 = (
-    # two-round-green r13-rotation cohort (driver-green r13 + r14),
-    # per the SURVEY §7 round-15 plan: the r13 second-pass refresh
-    # block plus r13's own registrants. Every rotated-out shape keeps
-    # an in-window or pytest twin: the corpus/dedup chains keep their
-    # pytest oracles plus the in-window dedup_connected /
-    # dedup_minhash_lsh siblings, the streaming pair keeps
-    # mtm_streaming / dedup_incremental_near_stream in-window, and
-    # copurchase_triangles' kernel stays exercised by the six r15
-    # graph rotate-ins that share it (operators/graph.py).
-    "contamination_check",
-    "corpus_filter_pipeline",
-    "dedup_substring",
-    "dedup_semantic",
-    "tech_indicators",
-    "stream_join",
-    "stream_session",
-    "mtm_sweep_stream",
-    "corpus_pack_shards_stream",
-    "multimodal_mpeg1",
-    "copurchase_triangles",
-    # five longest-exposed window keys (driver-green r9/r10 through
-    # r14, ≥5 consecutive green rounds) making slots for the 16-key
-    # rotate-in; each keeps family coverage: simhash_pairs →
-    # dedup_connected (in-window, same simhash band chain),
-    # quality_classifier_scores → text_quality/corpus_filter pytest
-    # oracles, events_variant → events_json_extract pytest oracle,
-    # stream_topk_trending → the in-window streaming family,
-    # text_normalize → its own pytest oracle.
-    "simhash_pairs",
-    "quality_classifier_scores",
-    "events_variant",
-    "stream_topk_trending",
-    "text_normalize",
-)
-ROTATED_IN_R15 = (
-    # the nine-key first-exposure block registered in the r14 second
-    # session AFTER the r14 window was fixed (SURVEY §7 item 20); all
-    # nine pre-verified hash-green at sf0.001 AND sf0.01 under the
-    # vanilla-session harness at the r14 close
     "copurchase_kcore_stream",
     "copurchase_topk_similar",
     "copurchase_communities",
@@ -1286,12 +767,6 @@ ROTATED_IN_R15 = (
     "copurchase_graph_profile",
     "minhash_calibration",
     "lang_id_confusion",
-    "dedup_cluster_stats",
-    # second-pass refresh, stale cohort: last driver exposure ≥4
-    # rounds old (bloom_prefilter r10, events_json_stream r10,
-    # symbol_correlation r8, stream_dedup r8, train_val_split r10,
-    # pii_scrub r10, embedding_quantize r10); all seven re-verified
-    # hash-green at sf0.01 at the r14 close
     "bloom_prefilter",
     "events_json_stream",
     "symbol_correlation",
@@ -1299,74 +774,14 @@ ROTATED_IN_R15 = (
     "train_val_split",
     "pii_scrub",
     "embedding_quantize",
-)
-ROTATED_OUT_R16 = (
-    # two-round-green r14-rotation cohort (driver-green r14 + r15),
-    # per the SURVEY §7 round-16 plan: the r9 second-pass refresh
-    # block plus r14's own registrant. Every rotated-out shape keeps
-    # an in-window or pytest twin: the TPC-H heads keep q1/q3-style
-    # siblings plus their own pytest oracles, the media pair keeps
-    # image_dedup_connected (in-window, same dhash band chain), the
-    # kcore batch form keeps copurchase_kcore_stream (in-window, same
-    # peel kernel) plus its own pytest oracle.
-    "upsert_latest",
-    "q7_volume_shipping",
-    "q9_profit_by_nation",
-    "q13_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_pushdown",
-    "q22_idle_customers",
-    "multimodal_stream_decode",
-    "image_dhash",
-    "image_dhash_pairs",
-    "copurchase_kcore",
-    # four longest-exposed window keys (driver-green since round 1,
-    # 14 consecutive green rounds — the longest exposure of any
-    # non-flagship key) making slots for the 17-key rotate-in; each
-    # keeps family coverage: dedup_minhash_lsh → dedup_incremental_near
-    # + minhash_calibration (in-window, same band chain) + its pytest
-    # oracle, dedup_embedding → dedup_connected (in-window) + pytest,
-    # ann_ivf_topk/trained → ann_pq_rerank + hybrid_bm25_pq_rrf
-    # (in-window, same centroid/ADC machinery) + their pytest oracles.
-    # The six flagship MTM/stream anchors (mtm_* / events_stream_window
-    # / drawdown_stats) stay pinned — they are the reference-surface
-    # heads the driver smoke-checks through entry().
-    "dedup_minhash_lsh",
-    "dedup_embedding",
-    "ann_ivf_topk",
-    "ann_ivf_trained",
-    # two more slots for the r16 registrants below. dedup_cluster_stats
-    # follows the SURVEY §7 budget note verbatim: with dedup_keep_best
-    # rotating in, only ONE live simhash+CC chain should sit in-window
-    # at a time (both ride the same ~20-40 s chain; cluster_stats is
-    # driver-green r15 and keeps its pytest oracle + the in-window
-    # dedup_keep_best twin on the same kernel). audio_fingerprint is
-    # the next-longest-exposed key (driver-green r10-r15, 6 rounds);
-    # the audio family keeps audio_fp_pairs' pytest oracle and the
-    # in-window image_dedup_connected on the same banded-media chain.
-    "dedup_cluster_stats",
-    "audio_fingerprint",
-)
-ROTATED_IN_R16 = (
-    # r16's own registrants take their exposure the same round (the
-    # standing pattern; BIGINT + round(x,9)+0.0 outputs only —
-    # hash-safe by construction)
     "copurchase_components_refresh",
     "novelty_saturation",
-    # the six r15 registrants take their first driver exposure — all
-    # pre-verified hash-green at sf0.001 AND sf0.01 under the
-    # vanilla-session harness at the r15 close (SURVEY §7 item 21)
     "copurchase_components",
     "copurchase_communities_stream",
     "copurchase_degree_histogram",
     "copurchase_edge_embeddedness",
     "ngram_novelty",
     "ngram_novelty_probe",
-    # second-pass refresh, stale r11 cohort: last driver exposure r12,
-    # ≥4 rounds old at r16; ALL pre-verified hash-green at sf0.01 via
-    # SIM_KEYS at the r15 close (pass=11 fail=0)
     "embedding_pca_topk",
     "copurchase_pagerank",
     "dedup_keep_best",
@@ -1379,33 +794,9 @@ ROTATED_IN_R16 = (
     "events_anomaly_mad",
     "dq_audit",
 )
-for _out, _in in (
-    (ROTATED_OUT_R5, ROTATED_IN_R5),
-    (ROTATED_OUT_R6, ROTATED_IN_R6),
-    (ROTATED_OUT_R7, ROTATED_IN_R7),
-    (ROTATED_OUT_R8, ROTATED_IN_R8),
-    (ROTATED_OUT_R9, ROTATED_IN_R9),
-    (ROTATED_OUT_R10, ROTATED_IN_R10),
-    (ROTATED_OUT_R11, ROTATED_IN_R11),
-    (ROTATED_OUT_R12, ROTATED_IN_R12),
-    (ROTATED_OUT_R13, ROTATED_IN_R13),
-    (ROTATED_OUT_R14, ROTATED_IN_R14),
-    (ROTATED_OUT_R15, ROTATED_IN_R15),
-    (ROTATED_OUT_R16, ROTATED_IN_R16),
-):
-    for _k in _out:
-        EXTRA_QUERIES[_k] = QUERIES.pop(_k)
-        if _k in ORACLES:
-            EXTRA_ORACLES[_k] = ORACLES.pop(_k)
-    for _k in _in:
-        QUERIES[_k] = EXTRA_QUERIES.pop(_k)
-        if _k in EXTRA_ORACLES:
-            ORACLES[_k] = EXTRA_ORACLES.pop(_k)
-
-# Rotation-proof merged view for tests and tooling: every registered
-# query regardless of which side of the driver window it sits on.
-ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    **QUERIES,
-    **EXTRA_QUERIES,
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    k: ALL_QUERIES[k] for k in DRIVER_WINDOW
 }
-ALL_ORACLES: dict[str, str] = {**ORACLES, **EXTRA_ORACLES}
+ORACLES: dict[str, str] = {
+    k: ALL_ORACLES[k] for k in DRIVER_WINDOW if k in ALL_ORACLES
+}

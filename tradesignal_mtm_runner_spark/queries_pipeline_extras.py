@@ -1,10 +1,8 @@
 """Training-data-pipeline operators beyond the SURVEY §2 core (C20+).
 
-These run through the IDENTICAL DuckDB-oracle harness as the driver
-registry (tests/test_queries_oracle.py), but live in the pytest-extra
-registry because the driver's CORRECTNESS window is capped at the
-first 50 ``queries()`` entries and all 50 slots are taken by SURVEY §2
-keys (see queries.py tail).
+These run through the IDENTICAL DuckDB-oracle harness as every
+registered query (tests/test_queries_oracle.py); which of them the
+driver sees is set by ``DRIVER_WINDOW`` in queries.py.
 
 Operators (each is what a 100 TB pre-training corpus pipeline runs):
 
@@ -4062,7 +4060,7 @@ WHERE bit_count(xor(hi_a, hi_b)) + bit_count(xor(lo_a, lo_b))
 """
 
 
-PIPELINE_EXTRA_QUERIES = {
+PIPELINE_EXTRAS_QUERIES = {
     "image_dhash": image_dhash,
     "image_dhash_pairs": image_dhash_pairs,
     "audio_fingerprint": audio_fingerprint,
@@ -4109,7 +4107,7 @@ PIPELINE_EXTRA_QUERIES = {
     "stream_enrich": stream_enrich,
 }
 
-PIPELINE_EXTRA_ORACLES = {
+PIPELINE_EXTRAS_ORACLES = {
     "image_dhash": IMAGE_DHASH_SQL,
     "image_dhash_pairs": IMAGE_DHASH_PAIRS_SQL,
     "audio_fingerprint": AUDIO_FP_SQL,

@@ -439,8 +439,6 @@ FROM db LEFT JOIN fb ON fb.bucket = db.bucket
 R16_QUERIES: dict = {
     "copurchase_components_refresh": copurchase_components_refresh,
     "novelty_saturation": novelty_saturation,
-    # second batch — registered post-anchor (the r14b/r15 precedent):
-    # pytest-side this round, first driver exposure in the r17 rotation
     "dedup_containment": dedup_containment,
     "corpus_mix_drift": corpus_mix_drift,
 }

@@ -5,8 +5,8 @@ The reference stops at pnl / max_drawdown / sharpe (models.py:203,
 runner_mtm.py:118-204). These operators extend the same declarative
 timeline with the rest of the standard risk stack a backtesting user
 expects, each DuckDB-oracled through the identical pytest harness as
-the driver registry (the driver's 50-entry CORRECTNESS window is full
-with SURVEY §2 core keys, so these live in ``EXTRA_QUERIES``).
+every registered query (which of them the driver sees is set by
+``DRIVER_WINDOW`` in queries.py).
 
 - A15 ``risk_metrics`` — per-symbol Sortino ratio (downside
   deviation), Calmar ratio (annualized return / max drawdown),
@@ -555,7 +555,7 @@ FROM j
 """
 
 
-RISK_EXTRA_QUERIES = {
+RISK_QUERIES = {
     "risk_metrics": risk_metrics,
     "trade_stats": trade_stats,
     "tech_indicators": tech_indicators,
@@ -563,7 +563,7 @@ RISK_EXTRA_QUERIES = {
     "resample_ffill": resample_ffill,
 }
 
-RISK_EXTRA_ORACLES = {
+RISK_ORACLES = {
     "risk_metrics": RISK_METRICS_SQL,
     "trade_stats": TRADE_STATS_SQL,
     "tech_indicators": TECH_INDICATORS_SQL,
